@@ -133,6 +133,16 @@ object DeltaRead {
     else s"${table.stripSuffix("/")}/$decoded"
   }
 
+  /** Spark's directory name for a null (or empty-string) partition value.
+    * It names only the directory: the log records the value as null. */
+  private[sources] val DefaultPartition = "__HIVE_DEFAULT_PARTITION__"
+
+  /** A committed partition value. Null is committed as JSON null; older
+    * graft writers committed [[DefaultPartition]] literally, so that string
+    * reads as null too (the convertParquet rule). */
+  private def partitionValue(v: String): String =
+    if (v == DefaultPartition) null else v
+
   /** Log replay to `version` (-1 = latest): checkpoint state (if one at or
     * before the target exists) + JSON commits after it, in version order. */
   def snapshotInfo(spark: SparkSession, table: String, version: Long = -1L): Snapshot = {
@@ -240,7 +250,8 @@ object DeltaRead {
         .collect().foreach { r =>
           val p = resolve(table, r.getString(0))
           live(p) = LiveFile(p,
-            Option(r.getMap[String, String](1)).map(_.toMap).getOrElse(Map.empty),
+            Option(r.getMap[String, String](1))
+              .map(_.toMap.map { case (k, v) => k -> partitionValue(v) }).getOrElse(Map.empty),
             r.getLong(2), r.getLong(3), parseDv(r, 4),
             if (r.isNullAt(5)) None else Some(r.getString(5)))
         }
@@ -289,7 +300,7 @@ object DeltaRead {
             if (ad.has("partitionValues") && !ad.path("partitionValues").isNull)
               ad.path("partitionValues").fields().asScala
                 .map(e => e.getKey ->
-                  (if (e.getValue.isNull) null else e.getValue.asText())).toMap
+                  (if (e.getValue.isNull) null else partitionValue(e.getValue.asText()))).toMap
             else Map.empty
           live(p) = LiveFile(p, pv,
             ad.path("size").asLong(0L), ad.path("modificationTime").asLong(0L),
@@ -615,7 +626,7 @@ object DeltaRead {
         case _ => null
       }).getOrElse(null)
     // persisted per-file blooms (the `graftBloom` extended stats key —
-    // written by stageFiles for the table's `graft.bloom.columns`): each
+    // written by DeltaWrite.writeAdds for the table's `graft.bloom.columns`): each
     // opted-in EXISTING column gets a `bloom_<name>` binary column the
     // fileSurvives translator probes for =/IN where [min,max] can't help
     val bloomFields = snap.configuration.get("graft.bloom.columns").toSeq

@@ -101,163 +101,78 @@ object DeltaWrite {
       case _ => None
     }
 
-  /** Stage df's rows as parquet files in the table's standard partition
-    * layout; returns (relativePath, partitionValues, statsJson) per
-    * written file. Stats are the protocol's data-skipping JSON
-    * (numRecords / minValues / maxValues / nullCount over the supported
-    * data columns — timestamps ISO-8601 UTC at full microseconds, never
-    * truncated, so max bounds stay exact), computed by one aggregation
-    * over the staging dir before the move. */
-  private def stageFiles(df: DataFrame, table: String,
-      partitionBy: Seq[String]): Seq[(String, Map[String, String], Option[String])] = {
-    val stage = Files.createTempDirectory("graft_delta_write").toString
-    // HASH-DISTRIBUTE by the partition columns before a dynamic-partition
-    // write (round-19 optimization, guide §6 — the same move as Iceberg's
-    // write.distribution-mode=hash): without it every input task writes
-    // into EVERY partition dir it sees rows for — a single-task upstream
-    // (one-row-group parquet) wrote ~19k partition dirs SEQUENTIALLY
-    // (~290 s measured on a day×bucket composite at sf0.1). Distributed,
-    // each partition value is written by one task, in parallel, one file
-    // per partition dir per append. A heavily-skewed single partition
-    // value serializes on its one writer — the old path had the opposite
-    // (and worse) pathology. NUMBERED repartition deliberately: the
-    // column-only form is AQE-coalescible, and a few-MB staging shuffle
-    // coalesces to ONE partition (measured — the single sequential writer
-    // came straight back); a user-specified number is exempt.
-    val distributed =
-      if (partitionBy.isEmpty) df
-      else df.repartition(df.sparkSession.sparkContext.defaultParallelism,
-        partitionBy.map(org.apache.spark.sql.functions.col): _*)
-    val writer = distributed.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer).parquet(stage)
-    // an empty PARTITIONED write lays down no part file at all (there is
-    // no partition value to write under) — nothing staged, and the stats
-    // read-back below would fail schema inference on the empty dir. The
-    // schema-only commit (CREATE TABLE (schema), ADD COLUMN) rides on the
-    // metadata action alone.
-    def anyParquet(dir: java.io.File): Boolean =
-      Option(dir.listFiles()).getOrElse(Array.empty).exists {
-        case d if d.isDirectory => anyParquet(d)
-        case f => f.getName.endsWith(".parquet")
-      }
-    // persisted per-file blooms: the table opts in via the
-    // `graft.bloom.columns` property (ALTER TABLE … SET BLOOM FILTER) —
-    // point/IN predicates on high-NDV columns then prune where [min,max]
-    // spans the whole domain. Config names LOGICAL columns; the staged
-    // frame speaks physical under column mapping, so translate here.
-    val bloomCols: Seq[String] = scala.util.Try {
-      val snap = DeltaRead.snapshotInfo(df.sparkSession, table)
-      snap.configuration.get("graft.bloom.columns").toSeq
-        .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-        .map(snap.physicalName)
-    }.getOrElse(Nil).filter(df.columns.contains)
-    val statsByPath =
-      if (!anyParquet(new java.io.File(stage))) Map.empty[String, String]
-      else collectFileStats(df.sparkSession, stage,
-        df.schema.fields.toSeq.filterNot(f => partitionBy.contains(f.name))
-          .filter(f => DeltaRead.statsSupported(f.dataType)), bloomCols)
+  /** The table's opted-in bloom columns (`graft.bloom.columns`, set by
+    * ALTER TABLE … SET BLOOM FILTER), as the PHYSICAL names the data files
+    * carry under column mapping. */
+  private def bloomColumns(snap: DeltaRead.Snapshot): Seq[String] =
+    snap.configuration.get("graft.bloom.columns").toSeq
+      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+      .map(snap.physicalName)
 
-    def walk(dir: java.io.File, values: Map[String, String]): Seq[(java.io.File, Map[String, String])] =
-      Option(dir.listFiles()).getOrElse(Array.empty).toSeq.flatMap {
-        case d if d.isDirectory && d.getName.contains("=") =>
-          val Array(k, v) = d.getName.split("=", 2)
-          walk(d, values + (k -> DeltaRead.pctDecode(v)))
-        case f if f.isFile && f.getName.endsWith(".parquet") => Seq(f -> values)
-        case _ => Seq.empty
+  /** Write `df`'s rows as data files in the table's standard layout
+    * through [[DataFileWriter]] and return their add actions. The
+    * `partitionBy` columns are the keys: they stay out of the files, name
+    * Hive-style dirs `c=<pctEncode(value)>` (`c=__HIVE_DEFAULT_PARTITION__`
+    * for null), and land in `partitionValues` — all but a bucket layout's
+    * `__gb` ordinal, which rides in the PATH only. Each add carries the
+    * protocol's data-skipping stats (numRecords / minValues / maxValues /
+    * nullCount over the supported data columns; timestamps ISO-8601 UTC at
+    * full microseconds, never truncated, so max bounds stay exact) plus a
+    * per-file xxhash64 bloom sketch per `bloomCols` column under the
+    * extended `graftBloom` key (base64; stock readers ignore unknown
+    * keys). */
+  private def writeAdds(df: DataFrame, table: String, partitionBy: Seq[String],
+      bloomCols: Seq[String], dataChange: Boolean = true): Seq[String] = {
+    val dataCols = df.columns.toSeq.filterNot(partitionBy.contains)
+    val statFields = dataCols.map(df.schema(_))
+      .filter(f => DeltaRead.statsSupported(f.dataType))
+    val blooms = bloomCols.filter(dataCols.contains)
+    val written = DataFileWriter.write(df, table, dataCols, partitionBy,
+      vs => partitionBy.zip(vs).map { case (c, v) =>
+        s"$c=${if (v == null) DeltaRead.DefaultPartition else pctEncode(v)}"
+      }.mkString("/"),
+      statFields.map(_.name), blooms)
+    val logged = partitionBy.zipWithIndex.filterNot(_._1 == "__gb")
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    written.map { w =>
+      val root = om.createObjectNode()
+      root.put("numRecords", w.rows)
+      val (mins, maxs, nulls) =
+        (root.putObject("minValues"), root.putObject("maxValues"), root.putObject("nullCount"))
+      statFields.zip(w.stats).foreach { case (f, s) =>
+        if (s.min != null) mins.set[com.fasterxml.jackson.databind.JsonNode](f.name, jsonValue(f.dataType, s.min))
+        if (s.max != null) maxs.set[com.fasterxml.jackson.databind.JsonNode](f.name, jsonValue(f.dataType, s.max))
+        nulls.put(f.name, s.nulls)
       }
-    val moved = walk(new java.io.File(stage), Map.empty).flatMap { case (f, values) =>
-      statsByPath.get(f.toPath.toRealPath().toString) match {
-        // 0-row part file (empty upstream partition / empty overwrite):
-        // forms no aggregation group — skip it, same as the Iceberg stager
-        case None => None
-        case stats =>
-          // standard layout: partition dirs at the table root; path
-          // segments percent-encoded in the log exactly as the disk name
-          val partDirs = partitionBy.map { c =>
-            s"$c=${pctEncode(values.getOrElse(c, ""))}"
-          }
-          val rel = (partDirs :+ f.getName).mkString("/")
-          val dest = Paths.get(table, rel)
-          Files.createDirectories(dest.getParent)
-          Files.move(f.toPath, dest)
-          Some((rel, values, stats))
+      if (blooms.nonEmpty) {
+        val b = root.putObject("graftBloom")
+        w.blooms.foreach { case (c, blob) =>
+          b.put(c, java.util.Base64.getEncoder.encodeToString(blob)) }
       }
+      addAction(pctEncodePath(w.rel),
+        logged.map { case (c, i) => c -> w.valueStrings(i) }.toMap, w.size,
+        dataChange, Some(om.writeValueAsString(root)))
     }
-    // the staging dir now holds only _SUCCESS/metadata leftovers — drop it
-    def rmr(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rmr)
-      f.delete()
-    }
-    rmr(new java.io.File(stage))
-    moved
   }
 
-  /** One agg job over a staged write: per-file protocol stats JSON keyed
-    * by the file's absolute real path. `bloomFields` adds a per-file
-    * xxhash64(seed 42) bloom sketch per named column under the extended
-    * `graftBloom` stats key (base64; stock readers ignore unknown keys). */
-  private def collectFileStats(spark: SparkSession, stage: String,
-      statFields: Seq[org.apache.spark.sql.types.StructField],
-      bloomFields: Seq[String] = Nil): Map[String, String] = {
-    import org.apache.spark.sql.functions.{col => fcol, count => fcount, input_file_name, lit => flit, max => fmax, min => fmin, sum => fsum, when => fwhen, xxhash64}
-    // statFields may be empty (no supported columns): still aggregate the
-    // count — a file ABSENT from the result is exactly a 0-row part file,
-    // which stageFiles uses to skip committing empties
-    val aggs = (fcount(flit(1)).as("__n") +: statFields.flatMap(f => Seq(
-      fmin(fcol(f.name)).as(s"__mn_${f.name}"), fmax(fcol(f.name)).as(s"__mx_${f.name}"),
-      fsum(fwhen(fcol(f.name).isNull, flit(1L)).otherwise(flit(0L))).as(s"__nl_${f.name}")))) ++
-      bloomFields.map(c => graft.operators.BloomOps
-        .bloomAgg(xxhash64(fcol(c)), 1000000L, 1024L * 1024).as(s"__bl_$c"))
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    def jsonValue(dt: org.apache.spark.sql.types.DataType, v: Any): com.fasterxml.jackson.databind.JsonNode = {
-      val nf = om.getNodeFactory
-      dt match {
-        case org.apache.spark.sql.types.BooleanType => nf.booleanNode(v.asInstanceOf[Boolean])
-        case org.apache.spark.sql.types.IntegerType => nf.numberNode(v.asInstanceOf[Int])
-        case org.apache.spark.sql.types.LongType => nf.numberNode(v.asInstanceOf[Long])
-        case org.apache.spark.sql.types.FloatType => nf.numberNode(v.asInstanceOf[Float])
-        case org.apache.spark.sql.types.DoubleType => nf.numberNode(v.asInstanceOf[Double])
-        case org.apache.spark.sql.types.StringType => nf.textNode(v.asInstanceOf[String])
-        case org.apache.spark.sql.types.DateType => nf.textNode(v.toString)
-        case org.apache.spark.sql.types.TimestampType =>
-          val i = v.asInstanceOf[java.sql.Timestamp].toInstant
-          nf.textNode(java.time.format.DateTimeFormatter
-            .ofPattern("uuuu-MM-dd'T'HH:mm:ss.SSSSSS'Z'")
-            .withZone(java.time.ZoneOffset.UTC).format(i))
-        case other => throw new IllegalArgumentException(s"no stats encoding for $other")
-      }
+  /** A stats value as JSON (the protocol's per-type encoding). */
+  private def jsonValue(dt: org.apache.spark.sql.types.DataType, v: Any): com.fasterxml.jackson.databind.JsonNode = {
+    val nf = com.fasterxml.jackson.databind.node.JsonNodeFactory.instance
+    dt match {
+      case org.apache.spark.sql.types.BooleanType => nf.booleanNode(v.asInstanceOf[Boolean])
+      case org.apache.spark.sql.types.IntegerType => nf.numberNode(v.asInstanceOf[Int])
+      case org.apache.spark.sql.types.LongType => nf.numberNode(v.asInstanceOf[Long])
+      case org.apache.spark.sql.types.FloatType => nf.numberNode(v.asInstanceOf[Float])
+      case org.apache.spark.sql.types.DoubleType => nf.numberNode(v.asInstanceOf[Double])
+      case org.apache.spark.sql.types.StringType => nf.textNode(v.asInstanceOf[String])
+      case org.apache.spark.sql.types.DateType => nf.textNode(v.toString)
+      case org.apache.spark.sql.types.TimestampType =>
+        val i = v.asInstanceOf[java.sql.Timestamp].toInstant
+        nf.textNode(java.time.format.DateTimeFormatter
+          .ofPattern("uuuu-MM-dd'T'HH:mm:ss.SSSSSS'Z'")
+          .withZone(java.time.ZoneOffset.UTC).format(i))
+      case other => throw new IllegalArgumentException(s"no stats encoding for $other")
     }
-    spark.read.parquet(stage)
-      .groupBy(input_file_name().as("__f")).agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map { r =>
-        val root = om.createObjectNode()
-        root.put("numRecords", r.getAs[Long]("__n"))
-        val (mins, maxs, nulls) =
-          (root.putObject("minValues"), root.putObject("maxValues"), root.putObject("nullCount"))
-        statFields.foreach { f =>
-          val mn = r.getAs[Any](s"__mn_${f.name}")
-          val mx = r.getAs[Any](s"__mx_${f.name}")
-          if (mn != null) mins.set[com.fasterxml.jackson.databind.JsonNode](f.name, jsonValue(f.dataType, mn))
-          if (mx != null) maxs.set[com.fasterxml.jackson.databind.JsonNode](f.name, jsonValue(f.dataType, mx))
-          nulls.put(f.name, r.getAs[Long](s"__nl_${f.name}"))
-        }
-        if (bloomFields.nonEmpty) {
-          val blooms = root.putObject("graftBloom")
-          bloomFields.foreach { c =>
-            val blob = r.getAs[Array[Byte]](s"__bl_$c")
-            if (blob != null)
-              blooms.put(c, java.util.Base64.getEncoder.encodeToString(blob))
-          }
-        }
-        // input_file_name is a Hadoop-Path URI string: percent-escapes in
-        // it are ENCODING (space → %20, % → %25), not disk characters —
-        // decode once to recover the literal on-disk name (Hive only
-        // escapes its own reserved set, so e.g. spaces are literal on disk)
-        val full = DeltaRead.pctDecode(
-          new org.apache.hadoop.fs.Path(r.getAs[String]("__f")).toUri.getPath)
-        java.nio.file.Paths.get(full).toRealPath().toString -> om.writeValueAsString(root)
-      }.toMap
   }
 
   private def addAction(rel: String, values: Map[String, String], size: Long,
@@ -346,8 +261,10 @@ object DeltaWrite {
     // path mis-resolves renamed columns
     var stageDf = df
     var stageParts = declaredParts
+    var bloomCols = Seq.empty[String]
     if (exists) {
       val snap = DeltaRead.snapshotInfo(spark, table)
+      bloomCols = bloomColumns(snap)
       require(snap.partitionColumns == declaredParts,
         s"append partitioning $partitionBy does not match table's ${snap.partitionColumns}")
       bucketSpec.foreach { case (n, key) =>
@@ -407,10 +324,10 @@ object DeltaWrite {
       }
       enforceConstraints(snap, df)
     }
-    // bucketed staging: the ordinal column exists only during the write —
-    // partitionBy drops it from the file contents, the `__gb=k` path
-    // prefix carries it, and the add records plain (empty) partition
-    // values. NULL keys land deterministically in ordinal 0 rather than
+    // bucketed write: the ordinal column exists only during the write —
+    // it is the writer's key, so it stays out of the file contents, the
+    // `__gb=k` path prefix carries it, and the add records plain (empty)
+    // partition values. NULL keys land deterministically in ordinal 0 rather than
     // a null partition value (which would stage an un-decodable
     // `__HIVE_DEFAULT_PARTITION__` dir and silently brick the layout):
     // sound for every zero-exchange consumer — the join drops null keys
@@ -431,12 +348,7 @@ object DeltaWrite {
           org.apache.spark.sql.functions.lit(0)))
       stageParts = Seq("__gb")
     }
-    val staged = stageFiles(stageDf, table, stageParts)
-    val adds = staged.map { case (rel, values, stats) =>
-      addAction(pctEncodePath(rel),
-        if (bucketSpec.isDefined) Map.empty[String, String] else values,
-        Files.size(Paths.get(table, rel)), stats = stats)
-    }
+    val adds = writeAdds(stageDf, table, stageParts, bloomCols)
     val header =
       if (exists) evolvedMeta.toSeq
       else Seq(protocolAction, metaAction(df.schema, declaredParts, newTableId(),
@@ -477,10 +389,7 @@ object DeltaWrite {
     enforceConstraints(snapAtCheck, df)
     val (sdf, sparts) =
       if (mapped) toPhysical(snapAtCheck, df) else (df, partitionBy)
-    val staged = stageFiles(sdf, table, sparts)
-    val adds = staged.map { case (rel, values, stats) =>
-      addAction(pctEncodePath(rel), values, Files.size(Paths.get(table, rel)), stats = stats)
-    }
+    val adds = writeAdds(sdf, table, sparts, bloomColumns(snapAtCheck))
     while (true) {
       val snap = DeltaRead.snapshotInfo(spark, table)
       val removes = snap.files.map { f =>
@@ -581,10 +490,7 @@ object DeltaWrite {
       s"replaceWhere: $strays incoming row(s) do not satisfy '$where' — rows " +
         "outside the replaced scope would duplicate their live copies")
     val (sdf, sparts) = toPhysical(snap0, df)
-    val staged = stageFiles(sdf, table, sparts)
-    val adds = staged.map { case (rel, values, stats) =>
-      addAction(pctEncodePath(rel), values, Files.size(Paths.get(table, rel)), stats = stats)
-    }
+    val adds = writeAdds(sdf, table, sparts, bloomColumns(snap0))
     // the replacement was computed against snap0's state — files another
     // writer commits INTO the replaced scope after that are rows the
     // caller never saw, and silently removing them would be last-writer-
@@ -652,10 +558,7 @@ object DeltaWrite {
         }: _*)
         enforceConstraints(snap0, updated)
         val (sUpd, sParts) = toPhysical(snap0, updated)
-        val staged = stageFiles(sUpd, table, sParts)
-        val adds = staged.map { case (rel, values, stats) =>
-          addAction(pctEncodePath(rel), values, Files.size(Paths.get(table, rel)), stats = stats)
-        }
+        val adds = writeAdds(sUpd, table, sParts, bloomColumns(snap0))
         commitDvGuarded(spark, table, (dvActions ++ adds).mkString("", "\n", "\n"),
           dvAt0, affectedPaths)
     }
@@ -744,8 +647,8 @@ object DeltaWrite {
             bits = math.min(12, 62 / zorderBy.length))
         else if (zorderBy.nonEmpty) graft.operators.Layout.zcluster(df, zorderBy, nOut)
         else if (bucketSpec.isDefined) {
-          // recompute the ordinal and bring each bucket's rewritten rows
-          // into one task — one compacted file per (task, bucket)
+          // recompute the ordinal; the writer brings each bucket's
+          // rewritten rows into one task — one compacted file per bucket
           val (n, key) = bucketSpec.get
           require(!snap.schema.fieldNames.contains("__gb"),
             "bucketed Delta compact: column name '__gb' is reserved for " +
@@ -754,21 +657,14 @@ object DeltaWrite {
           df.withColumn("__gb", org.apache.spark.sql.functions.coalesce(
             IcebergTransforms.Bucket(n, key).column(fcol(key), dt),
             org.apache.spark.sql.functions.lit(0)))
-            .repartition(math.max(1, math.min(nOut, n)), fcol("__gb"))
         }
-        else if (snap.partitionColumns.nonEmpty)
-          df.repartition(nOut, snap.partitionColumns.map(fcol): _*)
+        // partitioned: the writer hash-distributes by the partition key
+        else if (snap.partitionColumns.nonEmpty) df
         else df.repartition(nOut)
       val (sPacked, sParts) =
         if (bucketSpec.isDefined) (packed, Seq("__gb")) // mapping is none
         else toPhysical(snap, packed)
-      val staged = stageFiles(sPacked, table, sParts)
-      val adds = staged.map { case (rel, values, stats) =>
-        addAction(pctEncodePath(rel),
-          if (bucketSpec.isDefined) Map.empty[String, String] else values,
-          Files.size(Paths.get(table, rel)),
-          dataChange = false, stats = stats)
-      }
+      val adds = writeAdds(sPacked, table, sParts, bloomColumns(snap), dataChange = false)
       val removes = candidates.map { f =>
         removeAction(pctEncodePath(f.path.stripPrefix(s"${table.stripSuffix("/")}/")),
           dataChange = false)
@@ -999,7 +895,7 @@ object DeltaWrite {
       val pv: Map[String, String] = rel.split("/").dropRight(1)
         .filter(_.contains("=")).map { seg =>
           val Array(k, v) = seg.split("=", 2)
-          k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null else DeltaRead.pctDecode(v))
+          k -> (if (v == DeltaRead.DefaultPartition) null else DeltaRead.pctDecode(v))
         }.toMap.view.filterKeys(partitionBy.contains).toMap
       require(pv.keySet == partitionBy.toSet,
         s"file $rel does not sit under all partition dirs ${partitionBy.mkString(",")}")
@@ -1401,10 +1297,7 @@ object DeltaWrite {
     val plan = dvDeletePlan(spark, table, snap0, matched)
 
     val (sdf, sparts) = toPhysical(snap0, df)
-    val staged = stageFiles(sdf, table, sparts)
-    val adds = staged.map { case (rel, values, stats) =>
-      addAction(pctEncodePath(rel), values, Files.size(Paths.get(table, rel)), stats = stats)
-    }
+    val adds = writeAdds(sdf, table, sparts, bloomColumns(snap0))
     plan match {
       case None => // pure insert: no DV guard needed, adds commute
         val content = adds.mkString("", "\n", "\n")
@@ -1457,10 +1350,7 @@ object DeltaWrite {
       .select(col("_file"), col("_pos"))
     val plan = dvDeletePlan(spark, table, snap0, matched)
     val (sIns, sParts) = toPhysical(snap0, inserts)
-    val staged = stageFiles(sIns, table, sParts)
-    val adds = staged.map { case (rel, values, stats) =>
-      addAction(pctEncodePath(rel), values, Files.size(Paths.get(table, rel)), stats = stats)
-    }
+    val adds = writeAdds(sIns, table, sParts, bloomColumns(snap0))
     // optional high-water mark ((appId, version) txn action) riding the
     // SAME commit — sync bookkeeping is atomic with the apply
     val txnActions = txn.toSeq.map { case (appId, v) =>

@@ -205,8 +205,8 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(session, LogicalRelation(relation))
   }
 
-  /** Driver-side prep for DIRECT parquet writes from task code (the
-    * single-pass staged-write replacement): Spark's own parquet
+  /** Driver-side prep for DIRECT parquet writes from task code
+    * ([[graft.sources.DataFileWriter]]): Spark's own parquet
     * `OutputWriterFactory` (same WriteSupport, codec, field-id and
     * timestamp settings as `DataFrameWriter.parquet`) plus a broadcast of
     * the prepared job conf for task-side `TaskAttemptContext`s. */
@@ -217,6 +217,11 @@ object Bridge {
     val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val job = org.apache.hadoop.mapreduce.Job.getInstance(
       session.sessionState.newHadoopConf())
+    // raw local files: the checksummed local FS would leave a hidden
+    // `.<name>.crc` beside every data file in the table directory
+    job.getConfiguration.set("fs.file.impl",
+      classOf[org.apache.hadoop.fs.RawLocalFileSystem].getName)
+    job.getConfiguration.setBoolean("fs.file.impl.disable.cache", true)
     val factory = org.apache.spark.sql.execution.datasources.parquet.ParquetUtils
       .prepareWrite(session.sessionState.conf, job, dataSchema,
         new org.apache.spark.sql.execution.datasources.parquet.ParquetOptions(

@@ -586,4 +586,41 @@ class DeltaWriteSpec extends SparkSpec {
     // Lake dispatch
     assert(Lake.vacuum(spark, table, minFileAgeMs = 0L).isEmpty)
   }
+
+  test("NULL partition values commit as JSON null; string and date partitions read back") {
+    import org.apache.spark.sql.functions.col
+    val table = Files.createTempDirectory("graft_dw_nullpart").toString
+    val day = java.sql.Date.valueOf("2024-03-05")
+    val in = Seq[(Long, String, java.sql.Date)](
+      (1L, "x", day), (2L, null, day), (3L, "", null), (4L, null, null))
+    DeltaWrite.append(spark, in.toDF("id", "g", "d"), table, Seq("g", "d"))
+    // the log records null — never Spark's directory placeholder…
+    val snap = DeltaRead.snapshotInfo(spark, table)
+    val pvs = snap.files.map(_.partitionValues).toSet
+    assert(pvs === Set(Map("g" -> "x", "d" -> "2024-03-05"), Map("g" -> null, "d" -> "2024-03-05"),
+      Map("g" -> null, "d" -> null)))
+    // …which still names the directory (empty strings are null, as in partitionBy)
+    assert(snap.files.forall(f => f.partitionValues("g") != null ||
+      f.path.contains("/g=__HIVE_DEFAULT_PARTITION__/")))
+    def read(t: String) = DeltaRead.snapshot(spark, t).select("id", "g", "d")
+      .as[(Long, String, java.sql.Date)].collect().toSet
+    val want = Set[(Long, String, java.sql.Date)](
+      (1L, "x", day), (2L, null, day), (3L, null, null), (4L, null, null))
+    assert(read(table) === want)
+    assert(DeltaRead.snapshot(spark, table).where(col("d").isNull).count() === 2L)
+    // a checkpoint carries the nulls through
+    DeltaWrite.checkpoint(spark, table)
+    assert(read(table) === want)
+
+    // a table committed by an older writer, with the placeholder literal in
+    // partitionValues, reads back null as well (string AND date columns)
+    val legacy = Files.createTempDirectory("graft_dw_nullpart_legacy").toString
+    DeltaWrite.append(spark, in.toDF("id", "g", "d"), legacy, Seq("g", "d"))
+    val log = Paths.get(legacy, "_delta_log", "00000000000000000000.json")
+    Files.writeString(log, Files.readString(log)
+      .replace("\"g\":null", "\"g\":\"__HIVE_DEFAULT_PARTITION__\"")
+      .replace("\"d\":null", "\"d\":\"__HIVE_DEFAULT_PARTITION__\""))
+    assert(Files.readString(log).contains("__HIVE_DEFAULT_PARTITION__"))
+    assert(read(legacy) === want)
+  }
 }

@@ -243,4 +243,44 @@ class IcebergStatsSpec extends SparkSpec {
       s"spec-mismatched entries must stay conservative ($hit of $total)")
     assert(df.count() === 1L)
   }
+
+  test("writer contract: one file per task or key; stats and sizes are the files'") {
+    import DeltaStatsSpec.{assertStatsMatchFiles, contractFrame, nonEmptyTasks}
+    val df = contractFrame(spark)
+    val cols = Seq("id", "s", "x", "d", "ts", "k")
+    def check(table: String, files: Long): Unit = {
+      val (stats, _) = IcebergRead.fileStatsFull(spark, table)
+      assert(stats.count() === files)
+      stats.select("file", "__fsize").collect().foreach { r =>
+        assert(r.getLong(1) === java.nio.file.Files.size(java.nio.file.Paths.get(r.getString(0))))
+      }
+      assertStatsMatchFiles(IcebergRead.fileStats(spark, table), cols)
+    }
+    // unpartitioned: the caller's partitioning, one file per non-empty task
+    val skewed = df.repartition(6, col("k"))
+    val unpart = tmp("ice_contract_u")
+    IcebergWrite.append(spark, skewed, unpart)
+    check(unpart, nonEmptyTasks(skewed))
+    // partitioned: one file per partition value (identity and bucket)
+    val part = tmp("ice_contract_p")
+    IcebergWrite.append(spark, df.repartition(3), part, Seq("k"))
+    check(part, 4L)
+    val bucketed = tmp("ice_contract_b")
+    IcebergWrite.append(spark, df.repartition(3), bucketed, Seq("bucket(3, id)"))
+    check(bucketed, 3L)
+  }
+
+  test("writer contract: a write whose task throws commits nothing") {
+    val boom = udf((i: Long) => if (i == 77L) throw new IllegalStateException("boom") else i)
+    val df = DeltaStatsSpec.contractFrame(spark)
+    val table = tmp("ice_contract_fail")
+    IcebergWrite.append(spark, df, table, Seq("k"))
+    val before = IcebergRead.fileStats(spark, table).select("file").collect().toSet
+    val meta = new java.io.File(s"$table/metadata").list().toSet
+    intercept[Exception](IcebergWrite.append(spark,
+      df.withColumn("id", boom(col("id"))), table, Seq("k")))
+    assert(new java.io.File(s"$table/metadata").list().toSet === meta)
+    assert(IcebergRead.fileStats(spark, table).select("file").collect().toSet === before)
+    assert(IcebergRead.snapshot(spark, table).count() === 240L)
+  }
 }
