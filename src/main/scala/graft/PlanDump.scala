@@ -16,7 +16,7 @@ object PlanDump {
     val picks = Seq(
       "b1_pricing" -> "scan pushdown + pruned columns + partial agg",
       "b2_join_revenue" -> "dim-reduced broadcast chain into the fact probe",
-      "b12_cosine_topk" -> "native vec_dot inside codegen; max_by top-1 (no window shuffle)",
+      "b12_cosine_topk" -> "exact top-1 from the primitive-array cosine kernel over a broadcast corpus (no pair rows, no nested loop)",
       "t9b_bloom_join" -> "bloom runtime filter probing the fact scan below the join",
       "b13_asof" -> "as-of join as one window over the tagged union",
       "l15_contamination" -> "sub-quadratic gram equi-join (no nested loop)",

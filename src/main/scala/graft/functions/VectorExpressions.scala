@@ -11,27 +11,17 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 /** Native Catalyst dot product over `array<double>` (SURVEY.md §4.3 phase 2).
   *
   * The HOF pipeline (`aggregate(zip_with(...))`) evaluates lambda functions
-  * per element through the interpreter — ~64 virtual calls per pair on the
-  * B12 hot path (4M pairs at sf0.1). This expression compiles to a tight
-  * primitive loop inside whole-stage codegen instead.
-  *
-  * `strict = true` (the default, and what SQL `vec_dot` and
-  * [[graft.plans.RewriteHofDotProduct]] emit — the rule substitutes this
-  * into USER queries, so divergence would silently change results) matches
-  * the HOF form EXACTLY:
+  * per element through the interpreter; this expression compiles to a tight
+  * primitive loop inside whole-stage codegen instead. SQL `vec_dot`,
+  * [[VectorOps.dot]] and [[graft.plans.RewriteHofDotProduct]] (which
+  * substitutes it into USER queries, so divergence would silently change
+  * results) all build it, and it matches the HOF form EXACTLY:
   *  - accumulation order: sequential left-to-right doubles (bit-for-bit);
   *  - length mismatch → NULL (zip_with pads with null, and null products
   *    poison the aggregate);
   *  - any NULL element → NULL.
-  *
-  * `strict = false` ([[VectorOps.dot]], the library-internal ANN kernels)
-  * drops the per-element null branches — measured 40% faster on the B12
-  * hot loop, where parquet array types claim containsNull even though the
-  * data has none. PRECONDITION: equal lengths, no null elements (truncates
-  * to min length and reads null slots as garbage otherwise).
   */
-case class DotProduct(left: Expression, right: Expression,
-    strict: Boolean = true) extends BinaryExpression {
+case class DotProduct(left: Expression, right: Expression) extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "vec_dot"
@@ -48,9 +38,9 @@ case class DotProduct(left: Expression, right: Expression,
         s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
   }
 
-  // element null checks needed only in strict mode AND when the array type
-  // admits null elements — the branch-free loop is kept where possible
-  private def checkElems: Boolean = strict && Seq(left, right).exists(_.dataType match {
+  // element null checks needed only when the array type admits null
+  // elements — the branch-free loop is kept where possible
+  private def checkElems: Boolean = Seq(left, right).exists(_.dataType match {
     case ArrayType(_, containsNull) => containsNull
     case _                          => false
   })
@@ -58,8 +48,8 @@ case class DotProduct(left: Expression, right: Expression,
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    if (strict && x.numElements() != y.numElements()) return null
-    val n = math.min(x.numElements(), y.numElements())
+    if (x.numElements() != y.numElements()) return null
+    val n = x.numElements()
     var s = 0.0
     var i = 0
     if (checkElems) {
@@ -78,16 +68,13 @@ case class DotProduct(left: Expression, right: Expression,
       val n = ctx.freshName("n")
       val i = ctx.freshName("i")
       val s = ctx.freshName("sum")
-      val lenGuard =
-        if (strict) s"if ($a.numElements() != $b.numElements()) { ${ev.isNull} = true; } else"
-        else ""
       val nullCheck =
         if (checkElems)
           s"if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }"
         else ""
       s"""
-        final int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-        $lenGuard {
+        final int $n = $a.numElements();
+        if ($n != $b.numElements()) { ${ev.isNull} = true; } else {
           double $s = 0.0;
           for (int $i = 0; $i < $n; $i++) {
             $nullCheck
@@ -150,7 +137,8 @@ object VectorExpressions {
 /** `spark.sql.extensions` entry point: registers the native function AND the
   * optimizer rule that rewrites the equivalent HOF idiom onto it
   * ([[graft.plans.RewriteHofDotProduct]]) — the full Expression + Rule +
-  * extensions stack. */
+  * extensions stack — and the planner strategy of the exact cosine top-k
+  * node ([[graft.operators.CosineTopKStrategy]]). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction(Bridge.functionDescription("vec_dot", classOf[DotProduct],
@@ -163,5 +151,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       classOf[JaccardSim], VectorExpressions.jaccardBuilder))
     ext.injectOptimizerRule(_ => graft.plans.RewriteHofDotProduct)
     ext.injectOptimizerRule(_ => graft.plans.MvRoutingRule)
+    ext.injectPlannerStrategy(_ => graft.operators.CosineTopKStrategy)
   }
 }

@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 import graft.Spread
 import graft.functions.VectorOps
 
@@ -10,8 +13,9 @@ import graft.functions.VectorOps
   * (SURVEY.md §2.10 L3).
   *
   * Three tiers:
-  *  - [[bruteForceTopK]]: exact, O(n·m) pairs — the correctness baseline and
-  *    oracle shape. At scale: broadcast the smaller side, block-partition.
+  *  - [[exactTopK]]: exact, O(n·m) pairs scored by one primitive-array
+  *    kernel, streaming the queries — the correctness baseline and oracle
+  *    shape; [[scalableTopK]] runs the same kernel streaming the corpus.
   *  - [[lshTopK]]: random-hyperplane LSH — candidates limited to the query's
   *    bucket, sub-linear probe cost, recall < 1 (measured in tests).
   *  - [[ivfTopK]]: inverted-file with coarse centroids — probe the nProbe
@@ -23,22 +27,80 @@ object Similarity {
     df.select(col(idCol).as(s"${prefix}_id"), VectorOps.asDouble(col(vecCol)).as(s"${prefix}v"))
       .withColumn(s"${prefix}n", VectorOps.norm(col(s"${prefix}v")))
 
-  /** Exact top-k cosine neighbors for each row of `queries` against `corpus`
-    * (self-search when `queries eq corpus`; self-matches excluded). */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
-    // spread the streamed side: a single-row-group query file would pin the
-    // whole O(n·m) scoring loop to one task (the corpus is the broadcast)
-    val q = prepared(queries, idCol, vecCol, "q")
-      .repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-    val c = prepared(corpus, idCol, vecCol, "c")
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("c_id").asc)
-    q.join(broadcast(c), col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"),
-        (VectorOps.dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id").as("vec_id"), col("rank"), col("c_id").as("nn_id"), col("cosine"))
+  /** (id as long, vector as array<double>) — the kernel's input rows. */
+  private def vectors(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol).cast("long"), VectorOps.asDouble(col(vecCol)))
+
+  private def integralId(df: DataFrame, idCol: String): DataType = {
+    val t = df.schema(idCol).dataType
+    require(t == LongType || t == IntegerType,
+      s"exact top-k id '$idCol' must be integral, got $t (the kernel packs ids as long)")
+    t
   }
+
+  /** Merges per-task top-k candidates into the top k per query id, in the
+    * kernel's own order (Spark's: cosine DESC NULLS LAST with NaN greatest,
+    * then nn_id ASC). A query id that occurs on several rows is ranked once
+    * over all of their candidates. */
+  private def rankPerQuery(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("vec_id")).orderBy(col("cosine").desc, col("nn_id").asc)
+    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+  }
+
+  private def withIdTypes(df: DataFrame, qType: DataType, cType: DataType): DataFrame =
+    df.select(col("vec_id").cast(qType).as("vec_id"), col("rank"),
+      col("nn_id").cast(cType).as("nn_id"), col("cosine"))
+
+  private def ansi(df: DataFrame): Boolean =
+    df.sparkSession.conf.get(SQLConf.ANSI_ENABLED.key).toBoolean
+
+  /** Exact top-k cosine neighbours of each row of `queries` among the rows
+    * of `corpus`: (vec_id, rank, nn_id, cosine). A pair never matches a row
+    * with itself (same id), and a null id never pairs.
+    *
+    * One plan node ([[CosineTopK]]): the corpus reaches every task through
+    * Spark's own broadcast exchange and is packed into primitive arrays
+    * ([[VectorBlock]]) once per task; each query partition
+    * ([[graft.Spread.ifNarrow]] is the only parallelism rule) is scored
+    * against it by [[CosineKernel]], which keeps a bounded top-k per query
+    * — no scored pair becomes a row. The frame is lazy: nothing runs until
+    * it is executed. Cosines are bit-identical to
+    * `vec_dot(q, c) / (norm(q) * norm(c))`, including its null cases and
+    * Spark's division by zero (NULL, or DIVIDE_BY_ZERO under ANSI mode) for
+    * a zero-norm vector.
+    *
+    * When `queries eq corpus` the node's ranks are final, query ids held by
+    * several rows included; otherwise a window over at most k candidates
+    * per query row merges rows that share a query id. */
+  def exactTopK(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
+      k: Int): DataFrame = {
+    require(k >= 1, s"k $k must be >= 1")
+    val (cType, qType) = (integralId(corpus, idCol), integralId(queries, idCol))
+    val self = queries eq corpus
+    val scored = topKFrame(k, ansi(corpus), queriesStreamed = true, self,
+      Spread.ifNarrow(vectors(queries, idCol, vecCol)), vectors(corpus, idCol, vecCol))
+    withIdTypes(if (self) scored else rankPerQuery(scored, k), qType, cType)
+  }
+
+  /** Exact top-k with the cluster-scale orientation: the (small) query side
+    * is broadcast, the corpus streams, and each corpus partition is scored
+    * by the same [[CosineKernel]] as [[exactTopK]] — a partition emits at
+    * most k candidates per query row, so the shuffle carries
+    * O(queries × k × partitions) rows, merged per query id in the kernel's
+    * order. Results identical to [[exactTopK]]. */
+  def scalableTopK(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
+      k: Int): DataFrame = {
+    require(k >= 1, s"k $k must be >= 1")
+    val (cType, qType) = (integralId(corpus, idCol), integralId(queries, idCol))
+    val scored = topKFrame(k, ansi(corpus), queriesStreamed = false, selfSearch = false,
+      Spread.ifNarrow(vectors(corpus, idCol, vecCol)), vectors(queries, idCol, vecCol))
+    withIdTypes(rankPerQuery(scored, k), qType, cType)
+  }
+
+  private def topKFrame(k: Int, ansi: Boolean, queriesStreamed: Boolean, selfSearch: Boolean,
+      streamed: DataFrame, broadcast: DataFrame): DataFrame =
+    Bridge.ofRows(streamed.sparkSession, CosineTopK(k, ansi, queriesStreamed, selfSearch,
+      Bridge.logicalPlan(streamed), Bridge.logicalPlan(broadcast)))
 
   /** Recall accounting for an ANN tier, as a single-row count frame: every
     * brute-force top-k pair left-joined against the ANN pairs — `queries`
@@ -93,7 +155,7 @@ object Similarity {
   /** ANN via multi-table hyperplane LSH: candidates are pairs sharing a
     * bucket in ANY of the `nTables` independent tables (the standard recall
     * lever), then exact-cosine re-ranked. Sub-quadratic: the pair join is
-    * equi on (table, bucket). Recall measured vs [[bruteForceTopK]] in the
+    * equi on (table, bucket). Recall measured vs [[exactTopK]] in the
     * test suite (not oracle-checked — approximate by design). */
   def lshTopK(corpus: DataFrame, idCol: String, vecCol: String, k: Int,
       nPlanes: Int = 8, nTables: Int = 4): DataFrame = {
@@ -120,28 +182,6 @@ object Similarity {
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select(col("q_id").as("vec_id"), col("rank"), col("c_id").as("nn_id"), col("cosine"))
-  }
-
-  /** Exact top-k with the cluster-scale plan shape: broadcast the (small)
-    * query side, stream the partitioned corpus, and aggregate per query with
-    * the bounded [[graft.functions.TopKAggregator]] — partitions emit at
-    * most k candidates per query, so the shuffle carries O(queries × k)
-    * rows instead of every scored pair. Results identical to
-    * [[bruteForceTopK]] (same ordering and tie-break). */
-  def scalableTopK(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
-    import graft.functions.{ScoredId, TopKAggregator}
-    val q = prepared(queries, idCol, vecCol, "q")
-    val c = prepared(corpus, idCol, vecCol, "c")
-      .repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-    val topk = udaf(new TopKAggregator(k), TopKAggregator.inputEncoder)
-    c.join(broadcast(q), col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"),
-        (VectorOps.dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cosine"))
-      .groupBy(col("q_id"))
-      .agg(topk(col("c_id"), col("cosine")).as("nn"))
-      .select(col("q_id"), posexplode(col("nn")))
-      .select(col("q_id").as("vec_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("col.id").as("nn_id"), col("col.score").as("cosine"))
   }
 
   /** Elementwise mean vector per cell key (posexplode → avg → re-assemble;

@@ -339,7 +339,7 @@ object VectorIndex {
   /** Top-k cosine neighbors from the persisted index: per query the
     * nProbe closest cells by centroid cosine (ties toward the lower cell
     * id), then exact scoring INSIDE the probed cells only. Self-matches
-    * (same id) excluded, matching [[Similarity.bruteForceTopK]]. With
+    * (same id) excluded, matching [[Similarity.exactTopK]]. With
     * nProbe ≥ nCells the result is exactly brute force. Output:
     * (vec_id, rank, nn_id, cosine). On a lake-backed index `version`
     * time-travels the corpus (point-in-time ANN — "what were the

@@ -4,8 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{GQuery, Tables}
-import graft.functions.VectorOps
-import graft.operators.{AsOfJoin, Sessionize}
+import graft.operators.{AsOfJoin, Sessionize, Similarity}
 
 /** B1–B15 (SURVEY.md §2.11): the headline bench + correctness suite.
   * Every query ends in a total order and rounds double aggregates (§0 rules).
@@ -254,31 +253,12 @@ object BenchQueries {
   val b12 = GQuery(
     "b12_cosine_topk",
     (s, dir) => {
-      // Scale shape: per-vector norms precomputed once (tiny); probe side
-      // repartitioned so the O(n²) pair loop parallelizes (the single-row-
-      // group scan would otherwise pin the whole nested loop to ONE task);
-      // corpus side broadcast; top-1 via partial-aggregating max(struct) —
-      // no 4M-row window shuffle. Equivalent to row_number()=1 over
-      // (sim DESC, b_id ASC): max struct picks max sim, then max(-b_id)
-      // = min b_id.
+      // exact top-1 per vector from the primitive-array cosine kernel: the
+      // corpus is broadcast once, each probe partition keeps its best
+      // neighbour per vector — no scored pair becomes a row
       val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
-        .withColumn("nrm", VectorOps.norm(col("v")))
-      // spread only when the scan itself is narrow (same guard as b8): on a
-      // compacted/multi-split layout the O(n²) loop is already parallel and
-      // the extra shuffle just costs latency
-      val a = graft.Spread.ifNarrow(
-        e.select(col("vec_id").as("a_id"), col("v").as("av"), col("nrm").as("an")))
-      val b = e.select(col("vec_id").as("b_id"), col("v").as("bv"), col("nrm").as("bn"))
-      a.join(broadcast(b), col("a_id") =!= col("b_id"))
-        .select(col("a_id"), col("b_id"),
-          (VectorOps.dot(col("av"), col("bv")) / (col("an") * col("bn"))).as("sim"))
-        .groupBy(col("a_id"))
-        // max_by → ObjectHashAggregate (hash, partial) — no sort of the 4M-pair
-        // stream; ordering key (sim, -b_id) = row_number over (sim DESC, b_id ASC)
-        .agg(max_by(struct(col("b_id").as("bid"), col("sim").as("sim")),
-          struct(col("sim"), (-col("b_id")).as("neg"))).as("s"))
-        .select(col("a_id").as("vec_id"), col("s.bid").as("nn_id"), round(col("s.sim"), 4).as("cosine"))
+      Similarity.exactTopK(e, e, "vec_id", "embedding", 1)
+        .select(col("vec_id"), col("nn_id"), round(col("cosine"), 4).as("cosine"))
         .orderBy(col("vec_id"))
         .limit(20)
     },

@@ -143,7 +143,7 @@ object LlmQueries {
     "l3_ann_brute_topk",
     (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      Similarity.bruteForceTopK(emb, emb.where(col("vec_id") < 10), "vec_id", "embedding", k = 5)
+      Similarity.exactTopK(emb, emb.where(col("vec_id") < 10), "vec_id", "embedding", k = 5)
         .select(col("vec_id"), col("rank"), col("nn_id"), round(col("cosine"), 4).as("cosine"))
         .orderBy(col("vec_id"), col("rank"))
     },
@@ -158,9 +158,10 @@ object LlmQueries {
       SELECT vec_id, rank, nn_id, round(cosine, 4) AS cosine
       FROM ranked WHERE rank <= 5 ORDER BY vec_id, rank"""))
 
-  // Same exact semantics as l3 through the cluster-scale plan (broadcast
-  // queries + bounded TopK aggregator; shuffle carries only k per query) —
-  // must hash-match the SAME oracle as the brute-force window plan.
+  // Same exact semantics as l3 through the cluster-scale orientation
+  // (broadcast queries, streamed corpus, per-partition top-k merged; the
+  // shuffle carries only k per query and partition) — must hash-match the
+  // SAME oracle as l3.
   val l3scalable = GQuery(
     "l3_ann_scalable_topk",
     (s, dir) => {
@@ -299,7 +300,7 @@ object LlmQueries {
   private def brute3(s: SparkSession, dir: String, maxQ: Option[Long] = None) = {
     val emb = t(s, dir, "embeddings")
     val q = maxQ.map(m => emb.where(col("vec_id") < m)).getOrElse(emb)
-    Similarity.bruteForceTopK(emb, q, "vec_id", "embedding", k = 3)
+    Similarity.exactTopK(emb, q, "vec_id", "embedding", k = 3)
   }
 
   // Per-tier thresholds: comfortably under each tier's measured sf0.01
@@ -1396,7 +1397,7 @@ object LlmQueries {
       val bm = Retrieval.bm25TopK(t(s, dir, "documents"), "doc_id", "text",
         bm25Terms, k = 50, k1 = 1.2, b = 0.75)
       val emb = t(s, dir, "embeddings")
-      val vec = Similarity.bruteForceTopK(emb, emb.where(col("vec_id") === 0),
+      val vec = Similarity.exactTopK(emb, emb.where(col("vec_id") === 0),
           "vec_id", "embedding", k = 50)
         .select(col("nn_id").as("doc_id"), col("rank"))
       Retrieval.rrfFuse(Seq(bm.select(col("doc_id"), col("rank")), vec),

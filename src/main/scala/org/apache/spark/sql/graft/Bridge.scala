@@ -44,6 +44,17 @@ object Bridge {
     org.apache.spark.sql.catalyst.expressions.ScalarSubquery(
       df.queryExecution.analyzed)
 
+  /** `RDD.mapPartitionsWithIndexInternal`, as Spark's own physical
+    * operators map their child's rows: no closure cleaning per call. */
+  def mapPartitionsWithIndexInternal[T, U: scala.reflect.ClassTag](
+      rdd: org.apache.spark.rdd.RDD[T],
+      f: (Int, Iterator[T]) => Iterator[U]): org.apache.spark.rdd.RDD[U] =
+    rdd.mapPartitionsWithIndexInternal(f)
+
+  /** Spark's own DIVIDE_BY_ZERO error, as ANSI-mode division raises it. */
+  def divideByZeroError(): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
+
   def registerFunction(spark: SparkSession, name: String,
       clazz: Class[_], builder: Seq[Expression] => Expression): Unit = {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

@@ -43,12 +43,37 @@ class PlanSpec extends SparkSpec {
   }
 
   test("B12: native vec_dot runs inside whole-stage codegen") {
-    val df = BenchQueries.b12.build(spark, sf001)
+    Tables.registerAll(spark, sf001)
+    val df = spark.sql(queries.SqlQueries.sql("b12_cosine_topk"))
     df.collect() // AQE: codegen stages only visible in the FINAL plan
     val plan = planOf(df)
     assert(plan.contains("vec_dot"), plan.take(2000))
     // whole-stage codegen renders as "*(n)" stage markers in plan strings
     assert(plan.contains("*("), plan.take(2000))
+  }
+
+  test("B12: the cosine kernel scores every pair without a join, an RDD scan or a shuffle") {
+    // the corpus arrives through one broadcast exchange; a single-file table
+    // also gets Spread.ifNarrow's round-robin spread of the probe side, a
+    // compacted one is read as is — the only other exchange would be a
+    // re-ranking shuffle the self-search skips
+    val compacted = java.nio.file.Files.createTempDirectory("graft_b12").toString
+    graft.operators.Layout.compact(Tables(spark, sf001, "embeddings"),
+      new java.io.File(compacted, "embeddings.parquet").getPath, 8)
+    for ((dir, spread) <- Seq(sf001 -> true, compacted -> false)) {
+      val df = BenchQueries.b12.build(spark, dir)
+      df.collect()
+      val plan = planOf(df)
+      assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
+        plan.take(3000))
+      assert(!plan.contains("Scan ExistingRDD"), plan.take(3000))
+      assert(plan.contains("CosineTopK"), plan.take(3000))
+      val (broadcasts, exchanges) = plan.split("== Initial Plan ==").head.linesIterator
+        .filter(_.contains("Exchange")).toSeq.partition(_.contains("BroadcastExchange"))
+      assert(broadcasts.size === 1, plan.take(3000))
+      assert(exchanges.forall(_.contains("RoundRobinPartitioning")), plan.take(3000))
+      assert(exchanges.nonEmpty === spread, plan.take(3000))
+    }
   }
 
   test("partitioned layout enables partition pruning") {

@@ -6,14 +6,38 @@ import org.apache.spark.sql.functions._
 class ScaleOpsSpec extends SparkSpec {
   import spark.implicits._
 
-  test("scalableTopK (bounded aggregator) equals bruteForceTopK (window) exactly") {
+  test("scalableTopK (broadcast queries) equals exactTopK exactly") {
     val emb = Tables(spark, sf001, "embeddings")
     val q = emb.where(col("vec_id") < 50)
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.select(col("vec_id"), col("rank"), col("nn_id"), round(col("cosine"), 9).as("c"))
         .orderBy("vec_id", "rank").as[(Long, Int, Long, Double)].collect().toSeq
     assert(canon(Similarity.scalableTopK(emb, q, "vec_id", "embedding", 3)) ===
-      canon(Similarity.bruteForceTopK(emb, q, "vec_id", "embedding", 3)))
+      canon(Similarity.exactTopK(emb, q, "vec_id", "embedding", 3)))
+  }
+
+  test("scalableTopK equals exactTopK with a zero-norm and a NaN vector in the corpus") {
+    // outside ANSI mode a zero-norm cosine is NULL (ranked last) and a NaN
+    // cosine ranks first (Spark's sort order), in both orientations
+    val corpus = Seq((0L, Array(1.0, 0.0)), (1L, Array(0.0, 0.0)), (2L, Array(0.6, 0.8)),
+      (3L, Array(Double.NaN, 1.0)), (4L, Array(-1.0, 0.5)), (5L, Array(0.0, 1.0)))
+      .toDF("vec_id", "embedding")
+    val q = corpus.where(col("vec_id") =!= 3L)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("vec_id", "rank").collect().toSeq.map(r => (r.getLong(0), r.getInt(1),
+        r.getLong(2), Option(r.get(3)).map(c => java.lang.Double.doubleToLongBits(c.asInstanceOf[Double]))))
+    val key = "spark.sql.ansi.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try {
+      val exact = rows(Similarity.exactTopK(corpus, q, "vec_id", "embedding", 6))
+      // vector 1's cosines are NULL, except against the NaN vector 3 (NaN),
+      // which every query ranks first
+      assert(exact.count(_._4.isEmpty) === 8)
+      assert(exact.filter(_._2 == 1).forall(r =>
+        r._3 == 3L && r._4.contains(java.lang.Double.doubleToLongBits(Double.NaN))))
+      assert(rows(Similarity.scalableTopK(corpus, q, "vec_id", "embedding", 6)) === exact)
+    } finally spark.conf.set(key, prev)
   }
 
   test("salted aggregation equals plain aggregation") {

@@ -14,7 +14,7 @@ class SimilaritySpec extends SparkSpec {
   ).toDF("vec_id", "embedding")
 
   test("brute-force top-k ranks by cosine with id tie-break") {
-    val nn = Similarity.bruteForceTopK(toy, toy, "vec_id", "embedding", k = 2)
+    val nn = Similarity.exactTopK(toy, toy, "vec_id", "embedding", k = 2)
       .where(col("vec_id") === 0L).orderBy("rank")
       .select("nn_id").as[Long].collect().toSeq
     assert(nn === Seq(1L, 2L)) // 1 (cos≈0.994) then 2 (cos 0) then never -1
@@ -22,7 +22,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("LSH ANN returns same-bucket exact-cosine neighbors with useful recall") {
     val emb = Tables(spark, sf001, "embeddings")
-    val brute = Similarity.bruteForceTopK(emb, emb, "vec_id", "embedding", k = 1)
+    val brute = Similarity.exactTopK(emb, emb, "vec_id", "embedding", k = 1)
       .select(col("vec_id"), col("nn_id")).as[(Long, Long)].collect().toMap
     val lsh = Similarity.lshTopK(emb, "vec_id", "embedding", k = 1, nPlanes = 4, nTables = 4)
       .select(col("vec_id"), col("nn_id")).as[(Long, Long)].collect().toMap
@@ -35,7 +35,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("IVF ANN with label cells achieves recall over brute force") {
     val emb = Tables(spark, sf001, "embeddings")
-    val brute = Similarity.bruteForceTopK(emb, emb, "vec_id", "embedding", k = 1)
+    val brute = Similarity.exactTopK(emb, emb, "vec_id", "embedding", k = 1)
       .select(col("vec_id"), col("nn_id")).as[(Long, Long)].collect().toMap
     val ivf = Similarity.ivfTopK(emb, "vec_id", "embedding", "label", k = 1, nProbe = 2)
       .select(col("vec_id"), col("nn_id")).as[(Long, Long)].collect().toMap
@@ -67,7 +67,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("trained-IVF ANN achieves recall over brute force") {
     val emb = Tables(spark, sf001, "embeddings")
-    val brute = Similarity.bruteForceTopK(emb, emb, "vec_id", "embedding", k = 1)
+    val brute = Similarity.exactTopK(emb, emb, "vec_id", "embedding", k = 1)
       .select(col("vec_id"), col("nn_id")).as[(Long, Long)].collect().toMap
     val ivf = Similarity.ivfTopKTrained(emb, "vec_id", "embedding", k = 1, nCells = 16, nProbe = 4)
       .select(col("vec_id"), col("nn_id")).as[(Long, Long)].collect().toMap
@@ -99,7 +99,7 @@ class SimilaritySpec extends SparkSpec {
   test("PQ ANN with exact re-rank recovers most true nearest neighbors") {
     val emb = Tables(spark, sf001, "embeddings")
     val queries = emb.where($"vec_id" < 50)
-    val brute = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", k = 1)
+    val brute = Similarity.exactTopK(emb, queries, "vec_id", "embedding", k = 1)
       .select(col("vec_id"), col("nn_id")).as[(Long, Long)].collect().toMap
     val pq = Similarity.pqTopK(emb, queries, "vec_id", "embedding",
       k = 1, m = 8, kCodes = 16, shortlist = 50, iters = 3)
@@ -150,7 +150,7 @@ class SimilaritySpec extends SparkSpec {
   test("SQ8 ANN with exact re-rank recovers most true nearest neighbors") {
     val emb = Tables(spark, sf001, "embeddings")
     val queries = emb.where($"vec_id" < 50)
-    val brute = Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", k = 1)
+    val brute = Similarity.exactTopK(emb, queries, "vec_id", "embedding", k = 1)
       .select(col("vec_id"), col("nn_id")).as[(Long, Long)].collect().toMap
     val sq = Similarity.sqTopK(emb, queries, "vec_id", "embedding", k = 1, shortlist = 30)
       .select(col("vec_id"), col("nn_id")).as[(Long, Long)].collect().toMap

@@ -27,7 +27,7 @@ class VectorIndexSpec extends SparkSpec {
     val dir = tmp("graft_vidx")
     VectorIndex.build(c, "vec_id", "embedding", dir, nCells = 4, iters = 3)
     val brute = collected(
-      Similarity.bruteForceTopK(c, c.where(col("vec_id") < 8), "vec_id", "embedding", k = 3))
+      Similarity.exactTopK(c, c.where(col("vec_id") < 8), "vec_id", "embedding", k = 3))
     val idx = collected(
       VectorIndex.query(spark, dir, c.where(col("vec_id") < 8), "vec_id", "embedding",
         k = 3, nProbe = 4))
@@ -79,7 +79,7 @@ class VectorIndexSpec extends SparkSpec {
       === centsBefore)
     // exhaustive query over the grown index == brute force over the union
     val brute = collected(
-      Similarity.bruteForceTopK(all, all.where(col("vec_id") < 6), "vec_id", "embedding", k = 3))
+      Similarity.exactTopK(all, all.where(col("vec_id") < 6), "vec_id", "embedding", k = 3))
     val idx = collected(
       VectorIndex.query(spark, dir, all.where(col("vec_id") < 6), "vec_id", "embedding",
         k = 3, nProbe = 4))
@@ -112,7 +112,7 @@ class VectorIndexSpec extends SparkSpec {
       .start()
     q.processAllAvailable(); q.stop()
     val brute = collected(
-      Similarity.bruteForceTopK(all, all.where(col("vec_id") < 6), "vec_id", "embedding", k = 3))
+      Similarity.exactTopK(all, all.where(col("vec_id") < 6), "vec_id", "embedding", k = 3))
     val idx = collected(
       VectorIndex.query(spark, dir, all.where(col("vec_id") < 6), "vec_id", "embedding",
         k = 3, nProbe = 4))
@@ -137,11 +137,11 @@ class VectorIndexSpec extends SparkSpec {
     // current state == brute force over the union
     assert(collected(VectorIndex.query(spark, dir, q6, "vec_id", "embedding",
         k = 3, nProbe = 4)) ===
-      collected(Similarity.bruteForceTopK(all, q6, "vec_id", "embedding", k = 3)))
+      collected(Similarity.exactTopK(all, q6, "vec_id", "embedding", k = 3)))
     // point-in-time: version v0 answers as if the ingest never happened
     assert(collected(VectorIndex.query(spark, dir, q6, "vec_id", "embedding",
         k = 3, nProbe = 4, version = v0)) ===
-      collected(Similarity.bruteForceTopK(first, q6, "vec_id", "embedding", k = 3)))
+      collected(Similarity.exactTopK(first, q6, "vec_id", "embedding", k = 3)))
     // probe pruning survives the Delta path too: fewer cells, same top cell
     assert(collected(VectorIndex.query(spark, dir, q6, "vec_id", "embedding",
       k = 3, nProbe = 1)).nonEmpty)
@@ -166,7 +166,7 @@ class VectorIndexSpec extends SparkSpec {
       val idx = collected(VectorIndex.query(spark, dir, q, "vec_id", "embedding",
         k = 3, nProbe = 4))
       assert(idx === collected(
-        Similarity.bruteForceTopK(b, q, "vec_id", "embedding", k = 3)),
+        Similarity.exactTopK(b, q, "vec_id", "embedding", k = 3)),
         s"$fmt rebuild must answer exactly like a fresh build over the new corpus")
       assert(idx.forall(_._3 >= 40L), s"$fmt rebuild left stale pre-rebuild vectors behind")
     }
@@ -186,7 +186,7 @@ class VectorIndexSpec extends SparkSpec {
     val idx = collected(VectorIndex.query(spark, dir, q, "vec_id", "embedding",
       k = 3, nProbe = 4))
     assert(idx === collected(
-      Similarity.bruteForceTopK(kept, q, "vec_id", "embedding", k = 3)))
+      Similarity.exactTopK(kept, q, "vec_id", "embedding", k = 3)))
     assert(idx.forall(_._3 < 30L), "a removed vector surfaced as a neighbor")
     // id-list sugar
     VectorIndex.remove(spark, dir, Seq(5L), "vec_id")
@@ -195,7 +195,7 @@ class VectorIndexSpec extends SparkSpec {
     // and the pre-delete state stays queryable (point-in-time)
     assert(collected(VectorIndex.query(spark, dir, q, "vec_id", "embedding",
         k = 3, nProbe = 4, version = v0)) ===
-      collected(Similarity.bruteForceTopK(all, q, "vec_id", "embedding", k = 3)))
+      collected(Similarity.exactTopK(all, q, "vec_id", "embedding", k = 3)))
     val pdir = tmp("graft_vidx_remove_plain")
     VectorIndex.build(all, "vec_id", "embedding", pdir, nCells = 4, iters = 3)
     intercept[IllegalArgumentException](
@@ -222,7 +222,7 @@ class VectorIndexSpec extends SparkSpec {
     val q = updated.where(col("vec_id") < 6)
     assert(collected(VectorIndex.query(spark, dir, q, "vec_id", "embedding",
         k = 3, nProbe = 4)) ===
-      collected(Similarity.bruteForceTopK(updated, q, "vec_id", "embedding", k = 3)))
+      collected(Similarity.exactTopK(updated, q, "vec_id", "embedding", k = 3)))
     // idempotence: upserting the SAME batch again changes nothing
     VectorIndex.upsert(spark, dir, reem, "vec_id", "embedding")
     assert(graft.sources.DeltaRead.snapshot(spark, s"$dir/vectors").count() === 40L)
@@ -285,17 +285,17 @@ class VectorIndexSpec extends SparkSpec {
     val q6 = all.where(col("vec_id") < 6)
     assert(collected(VectorIndex.query(spark, dir, q6, "vec_id", "embedding",
         k = 3, nProbe = 4)) ===
-      collected(Similarity.bruteForceTopK(all, q6, "vec_id", "embedding", k = 3)))
+      collected(Similarity.exactTopK(all, q6, "vec_id", "embedding", k = 3)))
     assert(collected(VectorIndex.query(spark, dir, q6, "vec_id", "embedding",
         k = 3, nProbe = 4, version = s0)) ===
-      collected(Similarity.bruteForceTopK(first, q6, "vec_id", "embedding", k = 3)))
+      collected(Similarity.exactTopK(first, q6, "vec_id", "embedding", k = 3)))
 
     // transactional remove (position deletes), then upsert without duplication
     VectorIndex.removeWhere(spark, dir, col("vec_id") >= 40L)
     val kept = all.where(col("vec_id") < 40)
     assert(collected(VectorIndex.query(spark, dir, q6, "vec_id", "embedding",
         k = 3, nProbe = 4)) ===
-      collected(Similarity.bruteForceTopK(kept, q6, "vec_id", "embedding", k = 3)))
+      collected(Similarity.exactTopK(kept, q6, "vec_id", "embedding", k = 3)))
     val reem = (0 until 6).map { i =>
       (i.toLong, Array.tabulate(4)(d => math.cos(i * 29 + d * 11).toFloat))
     }.toDF("vec_id", "embedding")
@@ -306,7 +306,7 @@ class VectorIndexSpec extends SparkSpec {
     val updated = reem.unionByName(kept.where(col("vec_id") >= 6))
     assert(collected(VectorIndex.query(spark, dir, q6, "vec_id", "embedding",
         k = 3, nProbe = 4)) ===
-      collected(Similarity.bruteForceTopK(updated, q6, "vec_id", "embedding", k = 3)))
+      collected(Similarity.exactTopK(updated, q6, "vec_id", "embedding", k = 3)))
 
     // compaction bin-packs within cells and materializes the deletes away
     val exhaustive = collected(VectorIndex.query(spark, dir, q6, "vec_id", "embedding",
@@ -322,7 +322,7 @@ class VectorIndexSpec extends SparkSpec {
     val qb = b.where(col("vec_id") < 46)
     val idx = collected(VectorIndex.query(spark, dir, qb, "vec_id", "embedding",
       k = 3, nProbe = 4))
-    assert(idx === collected(Similarity.bruteForceTopK(b, qb, "vec_id", "embedding", k = 3)))
+    assert(idx === collected(Similarity.exactTopK(b, qb, "vec_id", "embedding", k = 3)))
     assert(idx.forall(_._3 >= 40L), "iceberg rebuild left stale vectors behind")
   }
 
@@ -343,7 +343,7 @@ class VectorIndexSpec extends SparkSpec {
     val pq = VectorIndex.queryPq(spark, dir, q, "vec_id", "embedding",
       k = 3, nProbe = 4, shortlist = 60)
     assert(collected(pq) ===
-      collected(Similarity.bruteForceTopK(all, q, "vec_id", "embedding", k = 3)))
+      collected(Similarity.exactTopK(all, q, "vec_id", "embedding", k = 3)))
 
     // PHYSICAL proof the ADC probe never reads the float vectors: the
     // shortlist phase's scan has a codes-bearing ReadSchema WITHOUT the
@@ -363,7 +363,7 @@ class VectorIndexSpec extends SparkSpec {
     // a tight shortlist is approximate: gate recall instead of equality
     val tight = VectorIndex.queryPq(spark, dir, q, "vec_id", "embedding",
       k = 3, nProbe = 4, shortlist = 8)
-    val brute = Similarity.bruteForceTopK(all, q, "vec_id", "embedding", k = 3)
+    val brute = Similarity.exactTopK(all, q, "vec_id", "embedding", k = 3)
     val gate = Similarity.recallGate(tight, brute, minRecall = 0.7)
     assert(gate.head().getBoolean(gate.columns.indexOf("recall_ok")),
       "PQ recall below the tier's gate")
@@ -410,7 +410,7 @@ class VectorIndexSpec extends SparkSpec {
     val q = current.where(col("vec_id") < 6)
     assert(collected(VectorIndex.query(spark, dir, q, "vec_id", "embedding",
         k = 3, nProbe = 4)) ===
-      collected(Similarity.bruteForceTopK(current, q, "vec_id", "embedding", k = 3)))
+      collected(Similarity.exactTopK(current, q, "vec_id", "embedding", k = 3)))
     // no duplicated ids, no surviving deleted ids
     val store = graft.sources.DeltaRead.snapshot(spark, s"$dir/vectors")
     assert(store.groupBy(col("vec_id")).count().where(col("count") > 1).count() === 0L)
