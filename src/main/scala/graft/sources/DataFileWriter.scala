@@ -3,15 +3,17 @@ package graft.sources
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructType}
+import scala.jdk.CollectionConverters._
 
-/** The one writer of lake data files, shared by [[DeltaWrite]] and
-  * [[IcebergWrite]]. A commit in either format is data files plus log
-  * entries describing them, and that description is format-neutral: path,
-  * size, row count, partition values, column min/max/null counts and
-  * bloom sketches. All of it is computed in the write tasks, in the one
-  * pass that writes the rows; each format only encodes the result
-  * (Delta's `add.stats` JSON, Iceberg's manifest entries and bloom
-  * sidecar).
+/** The one writer of lake files, shared by [[DeltaWrite]] and
+  * [[IcebergWrite]]: every Delta and Iceberg data file, every Iceberg
+  * position- and equality-delete file, and the Delta checkpoint. A commit
+  * in either format is files plus log entries describing them, and that
+  * description is format-neutral: path, size, row count, partition values,
+  * column min/max/null counts and bloom sketches. All of it is computed in
+  * the write tasks, in the one pass that writes the rows; each format only
+  * encodes the result (Delta's `add.stats` JSON, Iceberg's manifest entries
+  * and bloom sidecar).
   *
   * Distribution is decided here and nowhere else:
   *  - partitioned (non-empty `keyCols`): hash-distribute by the key at
@@ -21,15 +23,22 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    single-task upstream wrote ~19k partition dirs sequentially). The
   *    repartition is NUMBERED on purpose: the column-only form is
   *    AQE-coalescible, and a few-MB shuffle coalesces to one task.
-  *  - unpartitioned: the caller's partitioning is kept, one file per
-  *    non-empty task and no shuffle (what `df.write.parquet` does), so a
-  *    compaction's `repartition(n)` or a z-order layout decides the count.
+  *  - unpartitioned: the caller's partitioning and row order are kept, one
+  *    file per non-empty task and no shuffle (what `df.write.parquet`
+  *    does), so a compaction's `repartition(n)`, a z-order layout or a
+  *    delete file's `(file_path, pos)` sort decides the count and order.
   *
   * Min/max use Spark's own orderings (NaN/UTF-8 semantics of the `min`/
   * `max` aggregates) and blooms insert `xxhash64(col)` (seed 42) per row
-  * exactly as `BloomOps.bloomAgg`. A failed task attempt can orphan
-  * UUID-named files; no commit cites them, since a commit only uses the
-  * results of the job, which fails as a whole. */
+  * exactly as `BloomOps.bloomAgg`.
+  *
+  * Failure contract: a write either returns every file it wrote or throws
+  * having deleted them. A failed or killed task attempt deletes the files
+  * it wrote; when the job fails, the driver also deletes every file under
+  * `root` that carries the write's name token (the files of tasks that
+  * had already succeeded) before rethrowing. Only a task that finishes
+  * writing after that sweep can still leave a file; no commit cites it,
+  * since a commit only uses the results of a job that succeeded. */
 object DataFileWriter {
 
   /** Bloom sketch sizing (expected items, bits) — the `bloomAgg` shape. */
@@ -52,11 +61,11 @@ object DataFileWriter {
   /** Write `df` as parquet files under `root`. Files hold `dataCols` (in
     * that order); `keyCols` are the typed partition keys — one file per
     * key, placed in the directory `dirOf(valueStrings)` names ("" = the
-    * root itself). `statCols` and `bloomCols` name data columns. An empty
-    * input writes no file. */
+    * root itself). `statCols` and `bloomCols` name data columns. Every
+    * file name starts with `prefix`. An empty input writes no file. */
   def write(df: DataFrame, root: String, dataCols: Seq[String], keyCols: Seq[String],
       dirOf: Seq[String] => String, statCols: Seq[String],
-      bloomCols: Seq[String]): Seq[WrittenFile] = {
+      bloomCols: Seq[String], prefix: String = ""): Seq[WrittenFile] = {
     val spark = df.sparkSession
     // distribute BEFORE projecting: a repartition directly on the caller's
     // plan collapses with a trailing repartition of its own (one shuffle,
@@ -78,8 +87,11 @@ object DataFileWriter {
     val rootPath = java.nio.file.Paths.get(root)
     java.nio.file.Files.createDirectories(rootPath)
     val rootReal = rootPath.toRealPath().toString
+    // one token per write names all its files, so a failed job's files
+    // can be found and deleted without the results it never returned
+    val token = s"$prefix${java.util.UUID.randomUUID()}"
 
-    laid.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
+    val rdd = laid.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
       import org.apache.spark.sql.catalyst.InternalRow
       import org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter
       import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, UnsafeProjection, UnsafeRow, XxHash64}
@@ -89,6 +101,7 @@ object DataFileWriter {
           new org.apache.hadoop.mapreduce.TaskAttemptID(
             "graft", 0, org.apache.hadoop.mapreduce.TaskType.MAP, pid, 0))
         val ext = factory.getFileExtension(tac)
+        val ctx = org.apache.spark.TaskContext.get()
         val dataProj = UnsafeProjection.create(
           dataSchema.fields.toSeq.zipWithIndex.map { case (f, i) =>
             BoundReference(i, f.dataType, f.nullable)
@@ -110,6 +123,7 @@ object DataFileWriter {
             Seq(BoundReference(i, dataSchema.fields(i).dataType, nullable = true)), 42L)))
         }
         val out = scala.collection.mutable.ArrayBuffer.empty[WrittenFile]
+        val opened = scala.collection.mutable.ArrayBuffer.empty[String] // absolute paths
         var writer: org.apache.spark.sql.execution.datasources.OutputWriter = null
         var curKey: UnsafeRow = null
         var values: Seq[Any] = Nil
@@ -131,9 +145,10 @@ object DataFileWriter {
             if (s == null || s.toString.isEmpty) null else s.toString
           }
           val dir = dirOf(strings)
-          val name = s"${java.util.UUID.randomUUID()}-part-$pid-$seq$ext"
+          val name = s"$token-part-$pid-${ctx.attemptNumber()}-$seq$ext"
           rel = if (dir.isEmpty) name else s"$dir/$name"
           seq += 1
+          opened += s"$rootReal/$rel"
           writer = factory.newInstance(s"$rootReal/$rel", dataSchema, tac)
           rows = 0L
           java.util.Arrays.fill(mins.asInstanceOf[Array[AnyRef]], null)
@@ -158,10 +173,10 @@ object DataFileWriter {
               (bloomCols(j), bos.toByteArray)
             })
         }
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit] { _ =>
-            if (writer != null) scala.util.Try(writer.close()) // failed task: release the stream
-          })
+        ctx.addTaskFailureListener { (_, _) =>
+          if (writer != null) scala.util.Try(writer.close())
+          opened.foreach(p => java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(p)))
+        }
         it.foreach { row =>
           val k = keyProj(row)
           if (curKey == null || k != curKey) {
@@ -192,6 +207,17 @@ object DataFileWriter {
         if (writer != null) closeFile()
         out.iterator
       }
-    }.collect().toSeq
+    }
+    try rdd.collect().toSeq
+    catch {
+      case e: Throwable =>
+        scala.util.Try {
+          val s = java.nio.file.Files.walk(rootPath)
+          try s.iterator().asScala.filter(_.getFileName.toString.startsWith(token)).toList
+            .foreach(java.nio.file.Files.deleteIfExists)
+          finally s.close()
+        }
+        throw e
+    }
   }
 }

@@ -10,9 +10,9 @@ import java.nio.file.{Files, Paths}
   * partition columns only in the log, optional checkpoint parquet +
   * `_last_checkpoint`) that any Delta reader can open.
   *
-  * Commit protocol: the same put-if-absent hard-link version claim as the
-  * engine's own catalog (graft.ingest.Catalog) — POSIX `createLink` fails
-  * atomically if the version file exists, so exactly one concurrent
+  * Commit protocol: the put-if-absent version claim of [[LogStore]] (a
+  * hard link, as the engine's own catalog graft.ingest.Catalog does) — it
+  * fails atomically if the version file exists, so exactly one concurrent
   * committer wins each number; appends commute and just re-claim the next
   * version, overwrites re-read state before re-claiming (optimistic loop).
   * This targets a filesystem with atomic link semantics (local/NFS/HDFS-
@@ -45,17 +45,8 @@ object DeltaWrite {
     m.writeValueAsString(s) // proper JSON string escaping (quotes, controls)
   }
 
-  private def tryCommitAt(table: String, version: Long, content: String): Boolean = {
-    Files.createDirectories(logDir(table))
-    val tmp = Files.createTempFile(logDir(table), "commit", ".tmp")
-    try {
-      Files.writeString(tmp, content)
-      Files.createLink(logDir(table).resolve(f"$version%020d.json"), tmp)
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException => false
-    } finally Files.delete(tmp)
-  }
+  private def tryCommitAt(table: String, version: Long, content: String): Boolean =
+    LogStore.putIfAbsent(logDir(table).resolve(f"$version%020d.json"), content)
 
   private def currentVersions(table: String): Seq[Long] = {
     val dir = logDir(table)
@@ -1427,10 +1418,13 @@ object DeltaWrite {
           $"dv._3".as("offset"), $"dv._4".as("sizeInBytes"),
           $"dv._5".as("cardinality"))).as("deletionVector"))).as("add"),
       when($"kind" === "txn", struct($"appId".as("appId"), $"tver".as("version"))).as("txn"))
-    val stage = Files.createTempDirectory("graft_delta_cp").toString
-    cp.coalesce(1).write.mode("overwrite").parquet(stage)
-    val part = new java.io.File(stage).listFiles().find(_.getName.endsWith(".parquet")).get
-    Files.move(part.toPath, logDir(table).resolve(f"${snap.version}%020d.checkpoint.parquet"))
+    // written beside the log, then renamed within the directory: a reader
+    // listing `*.checkpoint.parquet` sees the whole file or none of it
+    val Seq(written) = DataFileWriter.write(cp.coalesce(1), logDir(table).toString,
+      cp.columns.toSeq, Nil, _ => "", Nil, Nil)
+    Files.move(Paths.get(written.path),
+      logDir(table).resolve(f"${snap.version}%020d.checkpoint.parquet"),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     Files.writeString(logDir(table).resolve("_last_checkpoint"),
       s"""{"version":${snap.version},"size":${rows.size}}""")
     snap.version

@@ -460,19 +460,7 @@ object IcebergWrite {
            |"snapshots":[${(priorSnaps :+ snapJson).mkString(",")}]}"""
           .stripMargin.replaceAll("\n", "")
 
-      val tmp = Files.createTempFile(metaDir(table), "meta", ".tmp")
-      val won =
-        try {
-          Files.writeString(tmp, metaJson)
-          Files.createLink(metaDir(table).resolve(s"v$version.metadata.json"), tmp)
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
-        } finally Files.delete(tmp)
-      if (won) {
-        Files.writeString(metaDir(table).resolve("version-hint.text"), version.toString)
-        return snapshotId
-      }
+      if (writeMetaVersion(table, version, metaJson)) return snapshotId
       // lost the race: drop this attempt's manifest/list and re-author
       // against the winner's state (data files stay — they are re-added)
       Files.deleteIfExists(manifestPath)
@@ -796,7 +784,7 @@ object IcebergWrite {
           s"""{"timestamp-ms":${System.currentTimeMillis()},"snapshot-id":$staged}"""))
       if (dropBranch) refs.remove(branch)
       prior.put("last-updated-ms", System.currentTimeMillis())
-      if (writeMetaVersion(table, base + 1, prior)) return staged
+      if (writeMetaVersion(table, base + 1, mapper.writeValueAsString(prior))) return staged
     }
     -1L // unreachable
   }
@@ -843,7 +831,7 @@ object IcebergWrite {
       prior.put("default-spec-id", newSpecId)
       prior.put("last-partition-id", lastPartId + transforms.size)
       prior.put("last-updated-ms", System.currentTimeMillis())
-      if (writeMetaVersion(table, base + 1, prior)) return
+      if (writeMetaVersion(table, base + 1, mapper.writeValueAsString(prior))) return
     }
   }
 
@@ -1264,24 +1252,10 @@ object IcebergWrite {
         }: _*).localCheckpoint()
       if (updated.isEmpty) return prior.get.path("current-snapshot-id").asLong(-1L)
 
-      // old images → sorted (file_path, pos) delete parquet, exactly like
-      // [[deleteWhere]]'s staging
-      val matched = scoped(pruned)
+      // old images → the position-delete file, exactly like [[deleteWhere]]
+      val deleteFiles = writePositionDeletes(table, scoped(pruned)
         .where(condition)
-        .select(fcol("_file").as("file_path"), fcol("_pos").as("pos"))
-      val stage = Files.createTempDirectory("graft_iceberg_update")
-      matched.repartition(1).sortWithinPartitions("file_path", "pos")
-        .write.mode("overwrite").parquet(stage.toString)
-      def rmr(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rmr); f.delete()
-      }
-      val stagedFiles = Option(stage.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet")).toSeq
-      val nDeleted = spark.read.parquet(stage.toString).count()
-      Files.createDirectories(dataDir(table))
-      val deleteFile = dataDir(table).resolve(s"delete-${java.util.UUID.randomUUID()}.parquet")
-      Files.move(stagedFiles.head.toPath, deleteFile)
-      rmr(stage.toFile)
+        .select(fcol("_file").as("file_path"), fcol("_pos").as("pos")))
 
       val (emptySpecId, mintEmptySpec) = emptySpecFor(prior.get)
       val partitionBy = priorPartitionBy(prior.get)
@@ -1300,25 +1274,7 @@ object IcebergWrite {
           else (s"""$specs,{"spec-id":$emptySpecId,"fields":[]}""", defaultId, lastPartId)
         },
         authorManifest = { snapshotId =>
-          import org.apache.avro.generic.GenericData
-          val schema = entrySchema(Seq.empty)
-          val dataFileSchema = schema.getField("data_file").schema()
-          val partitionSchema = dataFileSchema.getField("partition").schema()
-          val dfr = new GenericData.Record(dataFileSchema)
-          dfr.put("content", 1) // POSITION_DELETES
-          dfr.put("file_path", deleteFile.toString)
-          dfr.put("file_format", "PARQUET")
-          dfr.put("partition", new GenericData.Record(partitionSchema))
-          dfr.put("record_count", nDeleted)
-          dfr.put("file_size_in_bytes", Files.size(deleteFile))
-          val e = new GenericData.Record(schema)
-          e.put("status", 1)
-          e.put("snapshot_id", snapshotId)
-          e.put("sequence_number", snapshotId)
-          e.put("file_sequence_number", snapshotId)
-          e.put("data_file", dfr)
-          val dmPath = metaDir(table).resolve(s"m-$snapshotId-${java.util.UUID.randomUUID()}.avro")
-          val dmLen = writeAvro(dmPath, schema, Seq(e))
+          val (dmPath, dmLen) = writeDeleteManifest(table, deleteFiles, 1, Nil, snapshotId)
           deleteManifest = (dmPath.toString, dmLen, 1, emptySpecId)
           authorKeptPlusNew(table, prior.get, Seq.empty, updated,
             transforms, partTypes)(snapshotId)
@@ -1326,7 +1282,8 @@ object IcebergWrite {
         carryPrior = ms => ms :+ deleteManifest,
         expectBase = Some(base))
       if (committed >= 0) return committed
-      Files.deleteIfExists(deleteFile) // lost the race: re-derive everything
+      // lost the race: re-derive everything
+      deleteFiles.foreach(w => Files.deleteIfExists(Paths.get(w.path)))
     }
     -1L // unreachable
   }
@@ -1523,7 +1480,7 @@ object IcebergWrite {
         .add(evolved)
       prior.put("current-schema-id", newId)
       prior.put("last-updated-ms", System.currentTimeMillis())
-      if (writeMetaVersion(table, base + 1, prior)) return
+      if (writeMetaVersion(table, base + 1, mapper.writeValueAsString(prior))) return
     }
   }
 
@@ -1542,7 +1499,7 @@ object IcebergWrite {
         .getOrElse { val o = mapper.createObjectNode(); prior.set[com.fasterxml.jackson.databind.JsonNode]("properties", o); o }
       props.foreach { case (k, v) => node.put(k, v) }
       prior.put("last-updated-ms", System.currentTimeMillis())
-      if (writeMetaVersion(table, base + 1, prior)) return
+      if (writeMetaVersion(table, base + 1, mapper.writeValueAsString(prior))) return
     }
   }
 
@@ -1604,7 +1561,7 @@ object IcebergWrite {
       entry.put("type", refType)
       refs.set[com.fasterxml.jackson.databind.JsonNode](name, entry)
       prior.put("last-updated-ms", System.currentTimeMillis())
-      if (writeMetaVersion(table, base + 1, prior)) return id
+      if (writeMetaVersion(table, base + 1, mapper.writeValueAsString(prior))) return id
     }
     -1L // unreachable
   }
@@ -1621,27 +1578,17 @@ object IcebergWrite {
         case Some(o: com.fasterxml.jackson.databind.node.ObjectNode) if o.has(name) =>
           o.remove(name)
           prior.put("last-updated-ms", System.currentTimeMillis())
-          if (writeMetaVersion(table, base + 1, prior)) return
+          if (writeMetaVersion(table, base + 1, mapper.writeValueAsString(prior))) return
         case _ => return
       }
     }
   }
 
-  /** Race-safe metadata-version write (create-link claim, version-hint on
-    * win) — the commit tail shared by ref edits and rollback. */
-  private def writeMetaVersion(table: String, version: Int,
-      node: com.fasterxml.jackson.databind.JsonNode): Boolean = {
-    val dir = metaDir(table)
-    val tmp = Files.createTempFile(dir, "meta", ".tmp")
-    val won =
-      try {
-        Files.writeString(tmp, mapper.writeValueAsString(node))
-        Files.createLink(dir.resolve(s"v$version.metadata.json"), tmp)
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-      } finally Files.delete(tmp)
-    if (won) Files.writeString(dir.resolve("version-hint.text"), version.toString)
+  /** Race-safe metadata-version write (put-if-absent claim, version-hint
+    * on win) — the commit tail of every metadata version. */
+  private def writeMetaVersion(table: String, version: Int, metaJson: String): Boolean = {
+    val won = LogStore.putIfAbsent(metaDir(table).resolve(s"v$version.metadata.json"), metaJson)
+    if (won) Files.writeString(metaDir(table).resolve("version-hint.text"), version.toString)
     won
   }
 
@@ -1692,7 +1639,7 @@ object IcebergWrite {
       prior.set[com.fasterxml.jackson.databind.JsonNode]("snapshot-log", logArr)
       prior.put("current-snapshot-id", toSnapshotId)
       prior.put("last-updated-ms", System.currentTimeMillis())
-      if (writeMetaVersion(table, base + 1, prior)) return toSnapshotId
+      if (writeMetaVersion(table, base + 1, mapper.writeValueAsString(prior))) return toSnapshotId
     }
     -1L // unreachable
   }
@@ -1744,15 +1691,9 @@ object IcebergWrite {
     src.set[com.fasterxml.jackson.databind.JsonNode]("snapshot-log", log)
     src.set[com.fasterxml.jackson.databind.JsonNode]("metadata-log", mapper.createArrayNode())
     val version = if (cur >= 1 && cur <= 1000000L) cur.toInt else 1
-    val dir = metaDir(target)
     require(currentVersion(target) == 0, s"clone target already exists: $target")
-    Files.createDirectories(dir)
-    val tmp = Files.createTempFile(dir, "meta", ".tmp")
-    try {
-      Files.writeString(tmp, mapper.writeValueAsString(src))
-      Files.createLink(dir.resolve(s"v$version.metadata.json"), tmp)
-    } finally Files.delete(tmp)
-    Files.writeString(dir.resolve("version-hint.text"), version.toString)
+    require(writeMetaVersion(target, version, mapper.writeValueAsString(src)),
+      s"clone target already exists: $target")
     cur
   }
 
@@ -1821,17 +1762,7 @@ object IcebergWrite {
           }
         return (dataWould ++ metaWould).map(_.getPath).toSeq
       }
-      val tmp = Files.createTempFile(metaDir(table), "meta", ".tmp")
-      val won =
-        try {
-          Files.writeString(tmp, mapper.writeValueAsString(newMeta))
-          Files.createLink(metaDir(table).resolve(s"v${base + 1}.metadata.json"), tmp)
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
-        } finally Files.delete(tmp)
-      if (won) {
-        Files.writeString(metaDir(table).resolve("version-hint.text"), (base + 1).toString)
+      if (writeMetaVersion(table, base + 1, mapper.writeValueAsString(newMeta))) {
         def norm(f: java.io.File): String = IcebergRead.localPath(f.getAbsolutePath)
         // AGE GRACE (same rule as DeltaWrite.vacuum): a concurrent append
         // stages data files under data/ BEFORE its metadata claim —
@@ -1905,7 +1836,7 @@ object IcebergWrite {
     require(prior0.isDefined, s"not an Iceberg table: $table")
     val (emptySpecId, mintEmptySpec) = emptySpecFor(prior0.get)
     val (deleteFiles, eqIds) =
-      stageEqualityDeletes(spark, table, prior0.get, keys, maxKeysPerFile)
+      writeEqualityDeletes(table, prior0.get, keys, maxKeysPerFile)
     commitSnapshot(table, "delete",
       schemasJson = carriedSchemas,
       specsJson = prior => {
@@ -1914,19 +1845,19 @@ object IcebergWrite {
         else (s"""$specs,{"spec-id":$emptySpecId,"fields":[]}""", defaultId, lastPartId)
       },
       authorManifest = { snapshotId =>
-        val (p, len) = equalityDeleteManifest(table, deleteFiles, eqIds, snapshotId)
+        val (p, len) = writeDeleteManifest(table, deleteFiles, 2, eqIds, snapshotId)
         (p, len, 1, emptySpecId, deleteFiles.size, 0L)
       },
       summaryProps = summaryProps)
   }
 
-  /** Resolve `keys`' columns to Iceberg field ids and stage the DISTINCT
-    * key rows as equality-delete parquet files under data/ — the staging
-    * half [[deleteWhereEquals]] and [[rowDeltaCommit]] share. Returns
-    * (delete files with exact record counts, key field ids). */
-  private def stageEqualityDeletes(spark: SparkSession, table: String,
+  /** Resolve `keys`' columns to Iceberg field ids and write the DISTINCT
+    * key rows as equality-delete parquet files under data/ — the half
+    * [[deleteWhereEquals]] and [[rowDeltaCommit]] share. Returns (delete
+    * files, key field ids). */
+  private def writeEqualityDeletes(table: String,
       prior: com.fasterxml.jackson.databind.JsonNode, keys: DataFrame,
-      maxKeysPerFile: Long): (Seq[(java.nio.file.Path, Long)], Seq[Int]) = {
+      maxKeysPerFile: Long): (Seq[DataFileWriter.WrittenFile], Seq[Int]) = {
     // key columns → Iceberg field ids from the current schema
     val cur = prior.path("schemas").elements().asScala
       .find(_.path("schema-id").asInt(-1) == prior.path("current-schema-id").asInt(0))
@@ -1937,60 +1868,48 @@ object IcebergWrite {
       throw new IllegalArgumentException(
         s"key column '$c' is not in the table schema (${idByName.keys.mkString(",")})")))
 
-    val stage = Files.createTempDirectory("graft_iceberg_eqdelete")
-    // one distinct shuffle; count + write reuse its shuffle files. The
-    // file count scales with the key count so each delete file is written
-    // by its own task and stays individually scannable.
+    // The file count scales with the key count so each delete file is
+    // written by its own task and stays individually scannable.
     val distinctKeys = keys.distinct()
     val nKeys = distinctKeys.count()
     require(nKeys > 0, "equality delete with an empty key set")
     val nFiles = math.max(1L, (nKeys + maxKeysPerFile - 1) / maxKeysPerFile).toInt
-    stampFieldIds(distinctKeys.repartition(nFiles),
-        keys.columns.toSeq.zip(eqIds).toMap)
-      .write.mode("overwrite").parquet(stage.toString)
-    def rmr(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rmr); f.delete()
-    }
-    // exact per-file record counts (the manifest's record_count is load-
-    // bearing for real readers) in one metadata-cheap job over the stage
-    import org.apache.spark.sql.functions.{count => fcount, input_file_name, lit => flit}
-    val perFileCounts: Map[String, Long] = spark.read.parquet(stage.toString)
-      .groupBy(input_file_name().as("f")).agg(fcount(flit(1)).as("n"))
-      .collect()
-      .map(r => (new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath
-        .split("/").last, r.getLong(1))).toMap
-    val staged = Option(stage.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.endsWith(".parquet") && perFileCounts.contains(f.getName))
-      .toSeq
-    Files.createDirectories(dataDir(table))
-    val deleteFiles: Seq[(java.nio.file.Path, Long)] = staged.map { f =>
-      val dest = dataDir(table).resolve(s"eq-delete-${java.util.UUID.randomUUID()}.parquet")
-      Files.move(f.toPath, dest)
-      (dest, perFileCounts(f.getName))
-    }
-    rmr(stage.toFile)
-    (deleteFiles, eqIds)
+    val written = DataFileWriter.write(
+      stampFieldIds(distinctKeys.repartition(nFiles), keys.columns.toSeq.zip(eqIds).toMap),
+      dataDir(table).toString, keys.columns.toSeq, Nil, _ => "", Nil, Nil,
+      prefix = "eq-delete-")
+    (written, eqIds)
   }
 
-  /** Author the ONE equality-delete manifest for `deleteFiles` (content=2
-    * entries carrying the key field ids). Returns (path, length). */
-  private def equalityDeleteManifest(table: String,
-      deleteFiles: Seq[(java.nio.file.Path, Long)], eqIds: Seq[Int],
+  /** Write `matched` (file_path, pos) as ONE position-delete file sorted by
+    * (file_path, pos), as the spec recommends for delete files; no file
+    * when nothing matched. */
+  private def writePositionDeletes(table: String,
+      matched: DataFrame): Seq[DataFileWriter.WrittenFile] =
+    DataFileWriter.write(matched.repartition(1).sortWithinPartitions("file_path", "pos"),
+      dataDir(table).toString, Seq("file_path", "pos"), Nil, _ => "", Nil, Nil,
+      prefix = "delete-")
+
+  /** Author the ONE delete manifest citing `deleteFiles`: content 1
+    * (position deletes) or 2 (equality deletes, whose entries carry the key
+    * field ids `eqIds`). Returns (path, length). */
+  private def writeDeleteManifest(table: String,
+      deleteFiles: Seq[DataFileWriter.WrittenFile], content: Int, eqIds: Seq[Int],
       snapshotId: Long): (java.nio.file.Path, Long) = {
     import org.apache.avro.generic.GenericData
     val schema = entrySchema(Seq.empty)
     val dataFileSchema = schema.getField("data_file").schema()
     val partitionSchema = dataFileSchema.getField("partition").schema()
-    val entries = deleteFiles.map { case (path, n) =>
+    val entries = deleteFiles.map { w =>
       val dfr = new GenericData.Record(dataFileSchema)
-      dfr.put("content", 2) // EQUALITY_DELETES
-      dfr.put("file_path", path.toString)
+      dfr.put("content", content)
+      dfr.put("file_path", w.path)
       dfr.put("file_format", "PARQUET")
       dfr.put("partition", new GenericData.Record(partitionSchema))
-      dfr.put("record_count", n)
-      dfr.put("file_size_in_bytes", Files.size(path))
-      dfr.put("equality_ids",
-        java.util.Arrays.asList(eqIds.map(Integer.valueOf): _*))
+      dfr.put("record_count", w.rows)
+      dfr.put("file_size_in_bytes", w.size)
+      if (eqIds.nonEmpty)
+        dfr.put("equality_ids", java.util.Arrays.asList(eqIds.map(Integer.valueOf): _*))
       val e = new GenericData.Record(schema)
       e.put("status", 1)
       e.put("snapshot_id", snapshotId)
@@ -2025,8 +1944,7 @@ object IcebergWrite {
       require(declared(f.name) == icebergType(f.dataType),
         s"upsert column '${f.name}' type ${icebergType(f.dataType)} does not " +
           s"match table's ${declared(f.name)}"))
-    val (deleteFiles, eqIds) =
-      stageEqualityDeletes(spark, table, prior, keys, 4000000L)
+    val (deleteFiles, eqIds) = writeEqualityDeletes(table, prior, keys, 4000000L)
     val partitionBy = priorPartitionBy(prior)
     val transforms = partitionBy.map(IcebergTransforms.parse)
     val partTypes: Seq[(String, DataType)] =
@@ -2040,7 +1958,7 @@ object IcebergWrite {
         else (s"""$specs,{"spec-id":$emptySpecId,"fields":[]}""", defaultId, lastPartId)
       },
       authorManifest = { snapshotId =>
-        val (dmPath, dmLen) = equalityDeleteManifest(table, deleteFiles, eqIds, snapshotId)
+        val (dmPath, dmLen) = writeDeleteManifest(table, deleteFiles, 2, eqIds, snapshotId)
         deleteManifest = (dmPath.toString, dmLen, 1, emptySpecId)
         authorKeptPlusNew(table, prior, Seq.empty, rows,
           transforms, partTypes)(snapshotId)
@@ -2126,28 +2044,14 @@ object IcebergWrite {
     // could be anything — assuming it is empty would mislabel the manifest)
     val (emptySpecId, mintEmptySpec) = emptySpecFor(prior0.get)
 
-    // one scan: matched rows → (file_path, pos), written sorted by
-    // (path, pos) as the spec recommends for delete files
+    // one scan: matched rows → (file_path, pos)
     // stats-pruned lineage: only files the predicate can touch are opened
-    val matched = scoped(IcebergRead.lineagePruned(spark, table, condition))
-      .where(condition)
-      .select(col("_file").as("file_path"), col("_pos").as("pos"))
-    val stage = Files.createTempDirectory("graft_iceberg_delete")
-    matched.repartition(1).sortWithinPartitions("file_path", "pos")
-      .write.mode("overwrite").parquet(stage.toString)
-    def rmr(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rmr); f.delete()
-    }
-    val staged = Option(stage.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".parquet")).toSeq
-    val nDeleted = spark.read.parquet(stage.toString).count()
-    if (nDeleted == 0) { rmr(stage.toFile); return -1L }
-    Files.createDirectories(dataDir(table))
-    val deleteFile = dataDir(table).resolve(s"delete-${java.util.UUID.randomUUID()}.parquet")
-    Files.move(staged.head.toPath, deleteFile)
-    rmr(stage.toFile)
+    val deleteFiles = writePositionDeletes(table,
+      scoped(IcebergRead.lineagePruned(spark, table, condition))
+        .where(condition)
+        .select(col("_file").as("file_path"), col("_pos").as("pos")))
+    if (deleteFiles.isEmpty) return -1L
 
-    val schema = entrySchema(Seq.empty)
     commitSnapshot(table, "delete",
       schemasJson = carriedSchemas,
       specsJson = prior => {
@@ -2156,25 +2060,8 @@ object IcebergWrite {
         else (s"""$specs,{"spec-id":$emptySpecId,"fields":[]}""", defaultId, lastPartId)
       },
       authorManifest = { snapshotId =>
-        import org.apache.avro.generic.GenericData
-        val dataFileSchema = schema.getField("data_file").schema()
-        val partitionSchema = dataFileSchema.getField("partition").schema()
-        val dfr = new GenericData.Record(dataFileSchema)
-        dfr.put("content", 1) // POSITION_DELETES
-        dfr.put("file_path", deleteFile.toString)
-        dfr.put("file_format", "PARQUET")
-        dfr.put("partition", new GenericData.Record(partitionSchema))
-        dfr.put("record_count", nDeleted)
-        dfr.put("file_size_in_bytes", Files.size(deleteFile))
-        val e = new GenericData.Record(schema)
-        e.put("status", 1)
-        e.put("snapshot_id", snapshotId)
-        e.put("sequence_number", snapshotId)
-        e.put("file_sequence_number", snapshotId)
-        e.put("data_file", dfr)
-        val manifestPath = metaDir(table).resolve(s"m-$snapshotId-${java.util.UUID.randomUUID()}.avro")
-        val manifestLen = writeAvro(manifestPath, schema, Seq(e))
-        (manifestPath, manifestLen, 1, emptySpecId, 1, 0L)
+        val (p, len) = writeDeleteManifest(table, deleteFiles, 1, Nil, snapshotId)
+        (p, len, 1, emptySpecId, deleteFiles.size, 0L)
       })
   }
 }

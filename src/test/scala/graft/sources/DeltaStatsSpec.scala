@@ -207,6 +207,7 @@ class DeltaStatsSpec extends SparkSpec {
     val table = tmp("delta_contract_fail")
     DeltaWrite.append(spark, DeltaStatsSpec.contractFrame(spark), table, Seq("k"))
     val before = DeltaRead.snapshotInfo(spark, table)
+    val onDisk = DeltaStatsSpec.filesUnder(table)
     intercept[Exception](DeltaWrite.append(spark,
       DeltaStatsSpec.contractFrame(spark).withColumn("id", boom(col("id"))), table, Seq("k")))
     intercept[Exception](DeltaWrite.upsert(spark,
@@ -215,6 +216,15 @@ class DeltaStatsSpec extends SparkSpec {
     assert(after.version === before.version)
     assert(after.files.map(_.path).toSet === before.files.map(_.path).toSet)
     assert(DeltaRead.snapshot(spark, table).count() === 240L)
+    assert(DeltaStatsSpec.filesUnder(table) === onDisk)
+    // unpartitioned: the throw lands in a write task holding an open file,
+    // beside tasks that finish theirs; the failed write leaves none of them
+    val flat = tmp("delta_contract_flat")
+    DeltaWrite.append(spark, DeltaStatsSpec.contractFrame(spark), flat)
+    val flatOnDisk = DeltaStatsSpec.filesUnder(flat)
+    intercept[Exception](DeltaWrite.append(spark,
+      DeltaStatsSpec.midTaskFailure(DeltaStatsSpec.contractFrame(spark), boom), flat))
+    assert(DeltaStatsSpec.filesUnder(flat) === flatOnDisk)
     // a failed first write creates no table
     val fresh = tmp("delta_contract_fresh")
     intercept[Exception](DeltaWrite.append(spark,
@@ -226,6 +236,7 @@ class DeltaStatsSpec extends SparkSpec {
 /** The data-file writer's contract checks, shared with IcebergStatsSpec. */
 object DeltaStatsSpec {
   import org.scalatest.Assertions._
+  import scala.jdk.CollectionConverters._
 
   /** A typed frame the contract cases share: nulls in `s`, a 4-valued key. */
   def contractFrame(spark: org.apache.spark.sql.SparkSession): DataFrame = {
@@ -236,6 +247,22 @@ object DeltaStatsSpec {
         java.sql.Timestamp.valueOf(f"2024-02-0${1 + i % 5} 0${i % 10}:00:00.00${i % 7}%d"),
         (i % 4).toInt)
     }.toDF("id", "s", "x", "d", "ts", "k")
+  }
+
+  /** `df` with `boom` applied to `id` inside four id-range tasks, so the
+    * row that throws comes mid-task (after its task opened a file) while
+    * the other tasks write theirs. A Project straight over the local frame
+    * would be folded on the driver, before any task runs. */
+  def midTaskFailure(df: DataFrame,
+      boom: org.apache.spark.sql.expressions.UserDefinedFunction): DataFrame =
+    df.repartitionByRange(4, col("id")).sortWithinPartitions("id")
+      .withColumn("id", boom(col("id")))
+
+  /** Every regular file under `root`, recursively. */
+  def filesUnder(root: String): Set[String] = {
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+    try s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_)).map(_.toString).toSet
+    finally s.close()
   }
 
   /** Non-empty tasks of `df` — the unpartitioned writer's file count. */

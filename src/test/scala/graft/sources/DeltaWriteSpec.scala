@@ -290,7 +290,14 @@ class DeltaWriteSpec extends SparkSpec {
   test("checkpoint add rows carry spec-required size/modificationTime/dataChange") {
     val table = Files.createTempDirectory("graft_dw_cp").toString
     DeltaWrite.append(spark, Seq((1L, "a", "x")).toDF("id", "name", "grp"), table, Seq("grp"))
+    def stages() = Option(new java.io.File(System.getProperty("java.io.tmpdir"))
+      .list((_, n) => n.startsWith("graft_delta_cp"))).map(_.toSet).getOrElse(Set.empty[String])
+    val stagesBefore = stages()
     DeltaWrite.checkpoint(spark, table)
+    // the checkpoint is written beside the log, leaving no stage behind
+    assert(stages() === stagesBefore)
+    assert(new java.io.File(table, "_delta_log").list().toSet === Set(
+      "00000000000000000000.json", "00000000000000000000.checkpoint.parquet", "_last_checkpoint"))
     val cp = spark.read.parquet(
       Paths.get(table, "_delta_log").toString + "/00000000000000000000.checkpoint.parquet")
     val addType = cp.schema("add").dataType.asInstanceOf[org.apache.spark.sql.types.StructType]

@@ -277,10 +277,68 @@ class IcebergStatsSpec extends SparkSpec {
     IcebergWrite.append(spark, df, table, Seq("k"))
     val before = IcebergRead.fileStats(spark, table).select("file").collect().toSet
     val meta = new java.io.File(s"$table/metadata").list().toSet
+    val onDisk = DeltaStatsSpec.filesUnder(table)
     intercept[Exception](IcebergWrite.append(spark,
       df.withColumn("id", boom(col("id"))), table, Seq("k")))
     assert(new java.io.File(s"$table/metadata").list().toSet === meta)
     assert(IcebergRead.fileStats(spark, table).select("file").collect().toSet === before)
     assert(IcebergRead.snapshot(spark, table).count() === 240L)
+    assert(DeltaStatsSpec.filesUnder(table) === onDisk)
+    // unpartitioned: the throw lands in a write task holding an open file,
+    // beside tasks that finish theirs; the failed write leaves none of them
+    val flat = tmp("ice_contract_flat")
+    IcebergWrite.append(spark, df, flat)
+    val flatOnDisk = DeltaStatsSpec.filesUnder(flat)
+    intercept[Exception](IcebergWrite.append(spark, DeltaStatsSpec.midTaskFailure(df, boom), flat))
+    assert(DeltaStatsSpec.filesUnder(flat) === flatOnDisk)
+  }
+
+  test("delete-file contract: entries describe their files; position order, key field ids") {
+    import scala.jdk.CollectionConverters._
+    val table = tmp("ice_delete_contract")
+    IcebergWrite.append(spark,
+      (1L to 40L).map(i => (i, s"n$i")).toDF("id", "name").repartition(3), table)
+    assert(IcebergWrite.deleteWhere(spark, table, col("id") % 5 === 0) > 0)
+    IcebergWrite.updateWhere(spark, table, Seq("name" -> lit("u")), col("id") % 7 === 0)
+    IcebergWrite.deleteWhereEquals(spark, table,
+      Seq(1L, 2L, 3L, 4L, 6L).map(Tuple1(_)).toDF("id"), maxKeysPerFile = 2L)
+    val expected = (1L to 40L).filterNot(i => i % 5 == 0 || Set(1L, 2L, 3L, 4L, 6L)(i))
+      .map(i => (i, if (i % 7 == 0) "u" else s"n$i")).toSet
+    assert(IcebergRead.snapshot(spark, table).select("id", "name").as[(Long, String)]
+      .collect().toSet === expected)
+
+    val meta = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(IcebergRead.metadataFile(table))
+    val idField = meta.path("schemas").elements().asScala.flatMap(_.path("fields").elements().asScala)
+      .find(_.path("name").asText() == "id").get.path("id").asInt()
+    val snap = meta.path("snapshots").elements().asScala
+      .find(_.path("snapshot-id").asLong() == meta.path("current-snapshot-id").asLong()).get
+    val entries = IcebergRead.avroRecords(snap.path("manifest-list").asText())
+      .filter(_.get("content").toString.toInt == 1)
+      .flatMap(m => IcebergRead.avroRecords(m.get("manifest_path").toString))
+      .map(_.get("data_file").asInstanceOf[org.apache.avro.generic.GenericRecord])
+    val byContent = entries.groupBy(_.get("content").toString.toInt)
+    assert(byContent(1).size === 2) // deleteWhere + updateWhere
+    assert(byContent(2).size > 1) // five keys split across files
+    entries.foreach { e =>
+      val path = e.get("file_path").toString
+      assert(e.get("record_count").toString.toLong === spark.read.parquet(path).count(), path)
+      assert(e.get("file_size_in_bytes").toString.toLong ===
+        java.nio.file.Files.size(java.nio.file.Paths.get(path)), path)
+    }
+    byContent(1).foreach { e =>
+      val rows = spark.read.parquet(e.get("file_path").toString).as[(String, Long)].collect().toSeq
+      assert(rows.nonEmpty && rows === rows.sorted)
+    }
+    byContent(2).foreach { e =>
+      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(e.get("file_path").toString),
+          spark.sparkContext.hadoopConfiguration))
+      try assert(footer.getFileMetaData.getSchema.getFields.get(0).getId.intValue === idField)
+      finally footer.close()
+      assert(e.get("equality_ids").asInstanceOf[java.util.List[_]].asScala.map(_.toString) ===
+        Seq(idField.toString))
+    }
   }
 }
