@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
+import graft.sources.Lake
 
 /** PERSISTED IVF vector index — the ANN lifecycle the in-memory tiers in
   * [[Similarity]] deliberately skip: train the coarse quantizer ONCE,
@@ -90,7 +91,7 @@ object VectorIndex {
     // stale store — a correctness hazard, not a perf one.
     deletePath(spark, s"$dir/vectors")
     writeAssigned(corpus.select(col(idCol), col(vecCol)), idCol, vecCol,
-      cents, cb, dir, format)
+      cents, cb, dir, if (format == "parquet") None else Some(Lake.format(format)))
   }
 
   private def deletePath(spark: SparkSession, path: String): Unit = {
@@ -99,12 +100,9 @@ object VectorIndex {
     if (fs.exists(p)) fs.delete(p, true)
   }
 
-  private def storeFormat(spark: SparkSession, dir: String): String =
-    graft.sources.Lake.detect(spark, s"$dir/vectors") match {
-      case graft.sources.Lake.Delta => "delta"
-      case graft.sources.Lake.Iceberg => "iceberg"
-      case _ => "parquet"
-    }
+  /** The vector store's lake format, None for a plain-parquet index. */
+  private def storeFormat(spark: SparkSession, dir: String): Option[Lake.TableFormat] =
+    Lake.tableOption(spark, s"$dir/vectors")
 
   /** The persisted PQ codebooks, when the index was built with pqM > 0. */
   private def codebooksOf(spark: SparkSession, dir: String): Option[DataFrame] = {
@@ -138,7 +136,7 @@ object VectorIndex {
   def removeWhere(spark: SparkSession, dir: String,
       pred: org.apache.spark.sql.Column): Long = {
     requireLake(spark, dir, "removeWhere")
-    graft.sources.Lake.deleteWhere(spark, s"$dir/vectors", pred)
+    Lake.deleteWhere(spark, s"$dir/vectors", pred)
   }
 
   /** [[removeWhere]] sugar for the common case: delete these vector ids. */
@@ -164,7 +162,7 @@ object VectorIndex {
         .select(col(idCol), col(vecCol), col("__cell").as("cell")),
       idCol, vecCol, codebooksOf(spark, dir))
       .repartition(col("cell"))
-    graft.sources.Lake.upsert(spark, assigned, s"$dir/vectors", Seq(idCol))
+    Lake.upsert(spark, assigned, s"$dir/vectors", Seq(idCol))
   }
 
   /** Pay down the small-file debt a stream of [[add]] batches accrues:
@@ -182,7 +180,7 @@ object VectorIndex {
     * version. */
   def compact(spark: SparkSession, dir: String): Long = {
     requireLake(spark, dir, "compact")
-    graft.sources.Lake.compact(spark, s"$dir/vectors")
+    Lake.compact(spark, s"$dir/vectors")
   }
 
   /** Keep the index in sync with a LAKE-BACKED corpus table (the source
@@ -205,18 +203,10 @@ object VectorIndex {
   def syncFromChanges(spark: SparkSession, dir: String, corpusTable: String,
       idCol: String, vecCol: String, sinceVersion: Long): Long = {
     requireLake(spark, dir, "syncFromChanges")
-    val (cur, feed) = graft.sources.Lake.detect(spark, corpusTable) match {
-      case graft.sources.Lake.Delta =>
-        (graft.sources.DeltaRead.snapshotInfo(spark, corpusTable).version,
-          (a: Long, b: Long) => graft.sources.DeltaRead.changesBetween(spark, corpusTable, a, b))
-      case graft.sources.Lake.Iceberg =>
-        (graft.sources.IcebergRead.currentSnapshotId(spark, corpusTable),
-          (a: Long, b: Long) => graft.sources.IcebergRead.changesBetween(spark, corpusTable, a, b))
-      case other => throw new IllegalArgumentException(
-        s"syncFromChanges needs a versioned lake corpus (change feed); got $other at $corpusTable")
-    }
+    val corpus = Lake.table(spark, corpusTable)
+    val cur = corpus.version(spark, corpusTable)
     if (cur == sinceVersion) return cur
-    val changes = feed(sinceVersion, cur)
+    val changes = corpus.changesBetween(spark, corpusTable, sinceVersion, cur)
       .select(col(idCol), col(vecCol), col("_change_type"))
     val cb = codebooksOf(spark, dir)
     // insert-leg rows carry the store's derived columns; delete-leg rows
@@ -236,13 +226,13 @@ object VectorIndex {
         delBase.withColumn("codes", lit(null).cast("array<int>"))
       else delBase)
       .withColumn("_change_type", lit("delete"))
-    graft.sources.Lake.applyChanges(spark, ins.unionByName(del),
+    Lake.applyChanges(spark, ins.unionByName(del),
       s"$dir/vectors", Seq(idCol))
     cur
   }
 
   private def requireLake(spark: SparkSession, dir: String, op: String): Unit =
-    require(storeFormat(spark, dir) != "parquet",
+    require(storeFormat(spark, dir).isDefined,
       s"$op needs a lake-backed index (transactional keyed delete/merge); " +
         s"the index at $dir is plain parquet — rebuild with format=\"delta\" " +
         "or format=\"iceberg\"")
@@ -261,20 +251,17 @@ object VectorIndex {
   }
 
   private def writeAssigned(vecs: DataFrame, idCol: String, vecCol: String,
-      cents: DataFrame, cb: Option[DataFrame], dir: String, format: String): Unit = {
+      cents: DataFrame, cb: Option[DataFrame], dir: String,
+      format: Option[Lake.TableFormat]): Unit = {
     val assigned = withCodes(
       Similarity.assignCells(vecs, vecCol, cents)
         .select(col(idCol), col(vecCol), col("__cell").as("cell")),
       idCol, vecCol, cb)
       .repartition(col("cell")) // few files per cell, not one per task
     format match {
-      case "delta" =>
-        graft.sources.DeltaWrite.append(vecs.sparkSession, assigned,
-          s"$dir/vectors", partitionBy = Seq("cell"))
-      case "iceberg" =>
-        graft.sources.IcebergWrite.append(vecs.sparkSession, assigned,
-          s"$dir/vectors", partitionBy = Seq("cell"))
-      case _ =>
+      case Some(t) =>
+        t.append(vecs.sparkSession, assigned, s"$dir/vectors", partitionBy = Seq("cell"))
+      case None =>
         assigned.write.mode("append").partitionBy("cell").parquet(s"$dir/vectors")
     }
   }
@@ -316,18 +303,14 @@ object VectorIndex {
       probedCells: Array[Int], version: Long): DataFrame = {
     val store = s"$dir/vectors"
     val probedSet = probedCells.map(_.toString).toSet
-    val scan = graft.sources.Lake.detect(spark, store) match {
-      case graft.sources.Lake.Delta =>
-        // log-level partition pruning (the keep callback sees the log's
-        // partitionValues strings) — unprobed cells' files never listed
-        graft.sources.DeltaRead.snapshotPruned(spark, store,
-          pv => pv.get("cell").exists(probedSet), version)
-      case graft.sources.Lake.Iceberg =>
-        // manifest-level pruning: the keep callback sees the TYPED
-        // partition record (cell is an int there, not a string)
-        graft.sources.IcebergRead.snapshotPruned(spark, store,
+    val scan = Lake.tableOption(spark, store) match {
+      case Some(t) =>
+        // log- / manifest-level partition pruning: unprobed cells' files
+        // are never listed. The keep callback sees Delta's partitionValues
+        // strings or Iceberg's TYPED record (cell is an int there)
+        t.readPruned(spark, store,
           pv => pv.get("cell").exists(v => probedSet(String.valueOf(v))), version)
-      case _ =>
+      case None =>
         require(version < 0,
           s"a plain-parquet index at $dir has no versions (asked for $version) — " +
             "build with format=\"delta\" or \"iceberg\" for point-in-time queries")

@@ -13,6 +13,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.functions.{col, count, lit, max, min, sum}
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
+import graft.sources.Lake
+
 /** TRANSPARENT MATERIALIZED-VIEW ROUTING — the OLAP-engine feature that
   * makes maintained rollups pay off without query rewrites: an optimizer
   * rule ([[MvRoutingRule]], injected via GraftExtensions) that recognizes
@@ -169,27 +171,6 @@ object Mv {
     register(spark, mvPath)
   }
 
-  /** The per-format lake adapter [[createVersioned]]/[[refreshIncremental]]
-    * dispatch through: current version id, snapshot at a version, and the
-    * insert/delete change feed between two versions. */
-  private case class Feed(
-      current: (SparkSession, String) => Long,
-      snapshotAt: (SparkSession, String, Long) => DataFrame,
-      changes: (SparkSession, String, Long, Long) => DataFrame)
-
-  private def feedFor(format: String): Feed = format match {
-    case "delta" => Feed(
-      (s, t) => graft.sources.DeltaRead.snapshotInfo(s, t).version,
-      (s, t, v) => graft.sources.DeltaRead.snapshot(s, t, v),
-      (s, t, a, b) => graft.sources.DeltaRead.changesBetween(s, t, a, b))
-    case "iceberg" => Feed(
-      (s, t) => graft.sources.IcebergRead.currentSnapshotId(s, t),
-      (s, t, v) => graft.sources.IcebergRead.snapshot(s, t, v),
-      (s, t, a, b) => graft.sources.IcebergRead.changesBetween(s, t, a, b))
-    case other => throw new IllegalArgumentException(
-      s"no incremental change feed for '$other' bases (delta | iceberg)")
-  }
-
   /** Build the rollup MV over a VERSIONED lake table's current snapshot
     * (`format` = "delta" | "iceberg"). The meta records the snapshot
     * VERSION / snapshot id, which is what makes [[refreshIncremental]]
@@ -202,9 +183,9 @@ object Mv {
   def createVersioned(spark: SparkSession, table: String, mvPath: String,
       keys: Seq[String], measures: Seq[String], format: String): MvDef = {
     require(keys.nonEmpty && measures.nonEmpty, "MV needs keys and measures")
-    val feed = feedFor(format)
-    val ver = feed.current(spark, table)
-    val base = feed.snapshotAt(spark, table, ver)
+    val lake = Lake.format(format)
+    val ver = lake.version(spark, table)
+    val base = lake.read(spark, table, ver)
     val rel = baseRelation(base)
     val dataDir = s"data_v$ver"
     rollup(base, keys, measures).write.mode("overwrite").parquet(s"$mvPath/$dataDir")
@@ -266,14 +247,14 @@ object Mv {
     require(d.format == "delta" || d.format == "iceberg",
       s"incremental refresh needs a versioned lake base; ${d.mvPath} records " +
         s"'${d.format}' (use refresh() for a full rebuild)")
-    val feed = feedFor(d.format)
-    val cur = feed.current(spark, d.baseTable)
+    val lake = Lake.format(d.format)
+    val cur = lake.version(spark, d.baseTable)
     if (cur == d.baseVersion) return d
-    val changes = feed.changes(spark, d.baseTable, d.baseVersion, cur)
+    val changes = lake.changesBetween(spark, d.baseTable, d.baseVersion, cur)
     val affected = changes.select(d.keys.map(col): _*).distinct()
       .toDF(d.keys.map(k => s"__k_$k"): _*)
       .localCheckpoint(false) // three consumers, one materialization
-    val snap = feed.snapshotAt(spark, d.baseTable, cur)
+    val snap = lake.read(spark, d.baseTable, cur)
     val rel = baseRelation(snap)
     def keyCond(df: DataFrame): Column =
       d.keys.map(k => df(k) <=> affected(s"__k_$k")).reduce(_ && _)

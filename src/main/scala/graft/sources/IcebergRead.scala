@@ -434,9 +434,10 @@ object IcebergRead {
     * metadata read; no data touched. */
   /** Snapshot HISTORY (DESCRIBE HISTORY analog): one row per snapshot in
     * COMMIT ORDER — (version = snapshot id, timestamp_ms, operation,
-    * added_files, removed_files), file counts summed from the snapshot's
-    * manifest-list rows. O(snapshots) driver metadata; expired snapshots
-    * are simply absent. */
+    * added_files, removed_files), file counts summed from the rows of the
+    * snapshot's manifest list that the snapshot itself added (a carried
+    * row counts the files of the snapshot that added it). O(snapshots)
+    * driver metadata; expired snapshots are simply absent. */
   def history(spark: SparkSession, table: String): DataFrame = {
     val meta = mapper.readTree(metadataFile(table))
     val byId = meta.path("snapshots").elements().asScala
@@ -445,7 +446,10 @@ object IcebergRead {
       val (added, removed) =
         if (s.has("manifest-list"))
           scala.util.Try {
-            val mls = avroRecords(s.path("manifest-list").asText())
+            val id = s.path("snapshot-id").asLong(-1L)
+            val mls = avroRecords(s.path("manifest-list").asText()).filter(r =>
+              Option(r.getSchema.getField("added_snapshot_id"))
+                .flatMap(f => Option(r.get(f.pos))).forall(_.toString.toLong == id))
             (mls.map(r => Option(r.get("added_files_count")).map(_.toString.toLong)
               .getOrElse(0L)).sum,
               mls.map(r => Option(r.get("deleted_files_count")).map(_.toString.toLong)

@@ -222,10 +222,18 @@ object IcebergWrite {
     Files.size(path)
   }
 
-  /** The current snapshot's manifest-list rows as (path, length, content,
-    * spec-id) — the tuple a successor snapshot carries forward verbatim. */
+  /** One manifest-list row. A manifest carried from the prior snapshot's
+    * list keeps the avro record the snapshot that added it wrote
+    * (`carried`); a manifest the new snapshot adds is authored from its
+    * own file and row counts. */
+  private final case class ListedManifest(path: String, length: Long, content: Int,
+      specId: Int, addedFiles: Int = 0, addedRows: Long = 0L,
+      carried: Option[org.apache.avro.generic.GenericRecord] = None)
+
+  /** The current snapshot's manifest-list rows, each carrying its record
+    * for a successor snapshot's list. */
   private def priorManifests(
-      prior: Option[com.fasterxml.jackson.databind.JsonNode]): Seq[(String, Long, Int, Int)] =
+      prior: Option[com.fasterxml.jackson.databind.JsonNode]): Seq[ListedManifest] =
     prior.toSeq.flatMap { meta =>
       val curSnap = meta.path("current-snapshot-id").asLong(-1L)
       meta.path("snapshots").elements().asScala
@@ -236,34 +244,45 @@ object IcebergWrite {
             new java.io.File(ml),
             new org.apache.avro.generic.GenericDatumReader[org.apache.avro.generic.GenericRecord]())
           try reader.iterator().asScala.toList.map(r =>
-            (r.get("manifest_path").toString, r.get("manifest_length").toString.toLong,
+            ListedManifest(r.get("manifest_path").toString,
+              r.get("manifest_length").toString.toLong,
               Option(r.get("content")).map(_.toString.toInt).getOrElse(0),
-              Option(r.get("partition_spec_id")).map(_.toString.toInt).getOrElse(0)))
+              Option(r.get("partition_spec_id")).map(_.toString.toInt).getOrElse(0),
+              carried = Some(r)))
           finally reader.close()
         }
     }
 
-  /** Author the snapshot's manifest list. Counts describe THIS snapshot's
-    * newly added manifest; carried rows keep (path, length, content,
-    * spec-id) — the fields [[IcebergRead]]'s subset consults. */
+  /** Author the snapshot's manifest list. A manifest this snapshot adds
+    * is stamped with its id (as sequence number and `added_snapshot_id`)
+    * and its own counts; a carried manifest keeps every field of the row
+    * the snapshot that added it wrote, so spec readers that filter
+    * manifests by `added_snapshot_id` or trust the counts read them
+    * right. A field a carried row lacks is authored as for a new row. */
   private def writeManifestList(table: String, snapshotId: Long,
-      rows: Seq[(String, Long, Int, Int)], addedFiles: Int, addedRows: Long): java.nio.file.Path = {
+      rows: Seq[ListedManifest]): java.nio.file.Path = {
     import org.apache.avro.generic.GenericData
-    val mlRecords = rows.map { case (mp, len, content, specId) =>
+    val mlRecords = rows.map { m =>
+      val fresh = Map[String, Any](
+        "manifest_path" -> m.path,
+        "manifest_length" -> m.length,
+        "partition_spec_id" -> m.specId,
+        "content" -> m.content,
+        "sequence_number" -> snapshotId,
+        "min_sequence_number" -> 1L,
+        "added_snapshot_id" -> snapshotId,
+        "added_files_count" -> m.addedFiles,
+        "existing_files_count" -> 0,
+        "deleted_files_count" -> 0,
+        "added_rows_count" -> m.addedRows,
+        "existing_rows_count" -> 0L,
+        "deleted_rows_count" -> 0L)
       val r = new GenericData.Record(manifestListSchema)
-      r.put("manifest_path", mp)
-      r.put("manifest_length", len)
-      r.put("partition_spec_id", specId)
-      r.put("content", content)
-      r.put("sequence_number", snapshotId)
-      r.put("min_sequence_number", 1L)
-      r.put("added_snapshot_id", snapshotId)
-      r.put("added_files_count", addedFiles)
-      r.put("existing_files_count", 0)
-      r.put("deleted_files_count", 0)
-      r.put("added_rows_count", addedRows)
-      r.put("existing_rows_count", 0L)
-      r.put("deleted_rows_count", 0L)
+      manifestListSchema.getFields.asScala.foreach { f =>
+        val kept = m.carried.flatMap(c =>
+          Option(c.getSchema.getField(f.name)).flatMap(cf => Option(c.get(cf.pos))))
+        r.put(f.pos, kept.getOrElse(fresh(f.name)))
+      }
       r
     }
     val mlPath = metaDir(table).resolve(s"snap-$snapshotId-${java.util.UUID.randomUUID()}.avro")
@@ -362,8 +381,7 @@ object IcebergWrite {
       specsJson: Option[com.fasterxml.jackson.databind.JsonNode] => (String, Int, Int),
       authorManifest: Long => (java.nio.file.Path, Long, Int, Int, Int, Long),
       summaryProps: Map[String, String] = Map.empty,
-      carryPrior: Seq[(String, Long, Int, Int)] => Seq[(String, Long, Int, Int)] =
-        identity,
+      carryPrior: Seq[ListedManifest] => Seq[ListedManifest] = identity,
       expectBase: Option[Int] = None,
       stagedRef: Option[String] = None): Long = {
     def jstr(s: String) = mapper.writeValueAsString(s)
@@ -387,9 +405,8 @@ object IcebergWrite {
       Files.createDirectories(metaDir(table))
       val (manifestPath, manifestLen, content, specId, addedFiles, addedRows) =
         authorManifest(snapshotId)
-      val mlPath = writeManifestList(table, snapshotId,
-        carryPrior(priorManifests(prior)) :+ (manifestPath.toString, manifestLen, content, specId),
-        addedFiles, addedRows)
+      val mlPath = writeManifestList(table, snapshotId, carryPrior(priorManifests(prior)) :+
+        ListedManifest(manifestPath.toString, manifestLen, content, specId, addedFiles, addedRows))
 
       val (schemas, currentSchemaId, lastColumnId) = schemasJson(prior)
       val (specs, defaultSpecId, lastPartitionId) = specsJson(prior)
@@ -901,8 +918,8 @@ object IcebergWrite {
         r.get("key").toString.toInt -> r.get("value")
       })
     val manifests = priorManifests(Some(prior))
-    val hasDeletes = manifests.exists(_._3 != 0)
-    val entries: Seq[LiveEntry] = manifests.filter(_._3 == 0).map(_._1).flatMap { mp =>
+    val hasDeletes = manifests.exists(_.content != 0)
+    val entries: Seq[LiveEntry] = manifests.filter(_.content == 0).map(_.path).flatMap { mp =>
       IcebergRead.avroRecords(mp).flatMap { e =>
         val status = opt(e, "status").map(_.toString.toInt).getOrElse(1)
         if (status == 2) None
@@ -1265,7 +1282,7 @@ object IcebergWrite {
       // the delete manifest is authored inside authorManifest (it needs
       // the snapshot id) and joins the manifest list through carryPrior —
       // one list, one snapshot, both halves atomic
-      var deleteManifest: (String, Long, Int, Int) = null
+      var deleteManifest: ListedManifest = null
       val committed = commitSnapshot(table, "overwrite",
         schemasJson = carriedSchemas,
         specsJson = p => {
@@ -1275,7 +1292,8 @@ object IcebergWrite {
         },
         authorManifest = { snapshotId =>
           val (dmPath, dmLen) = writeDeleteManifest(table, deleteFiles, 1, Nil, snapshotId)
-          deleteManifest = (dmPath.toString, dmLen, 1, emptySpecId)
+          deleteManifest = ListedManifest(dmPath.toString, dmLen, 1, emptySpecId,
+            deleteFiles.size, deleteFiles.map(_.rows).sum)
           authorKeptPlusNew(table, prior.get, Seq.empty, updated,
             transforms, partTypes)(snapshotId)
         },
@@ -1949,7 +1967,7 @@ object IcebergWrite {
     val transforms = partitionBy.map(IcebergTransforms.parse)
     val partTypes: Seq[(String, DataType)] =
       transforms.map(t => t.fieldName -> t.resultType(rows.schema(t.source).dataType))
-    var deleteManifest: (String, Long, Int, Int) = null
+    var deleteManifest: ListedManifest = null
     commitSnapshot(table, "overwrite",
       schemasJson = carriedSchemas,
       specsJson = p => {
@@ -1959,7 +1977,8 @@ object IcebergWrite {
       },
       authorManifest = { snapshotId =>
         val (dmPath, dmLen) = writeDeleteManifest(table, deleteFiles, 2, eqIds, snapshotId)
-        deleteManifest = (dmPath.toString, dmLen, 1, emptySpecId)
+        deleteManifest = ListedManifest(dmPath.toString, dmLen, 1, emptySpecId,
+          deleteFiles.size, deleteFiles.map(_.rows).sum)
         authorKeptPlusNew(table, prior, Seq.empty, rows,
           transforms, partTypes)(snapshotId)
       },

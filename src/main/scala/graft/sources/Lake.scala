@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Merge-on-read delete state a bucket layout carries. Both kinds are
   * FILE-scoped — a mask hides rows of a named data file but never moves a
@@ -49,16 +50,315 @@ object LayoutDeletes {
   }
 }
 
-/** Unified table entry point: detect the table format from its on-disk
-  * layout and dispatch to the right reader — a `_delta_log` dir →
-  * [[DeltaRead]], `.metadata.json` files under `metadata` →
-  * [[IcebergRead]], otherwise a plain parquet directory. Detection reads
-  * only directory listings (no data). */
+/** Unified table entry point. A table is a Delta or Iceberg log of
+  * versions over data files, or a plain parquet directory; [[detect]]
+  * tells them apart from directory listings alone (a `_delta_log` dir, or
+  * `.metadata.json` files under `metadata`). Each public verb resolves its
+  * path once and forwards to the [[TableFormat]] found there — [[table]]
+  * for verbs that need a log, refusing plain parquet at one point — so no
+  * caller re-matches the format. Verbs only one format has (Iceberg
+  * branches, refs and spec evolution; Delta constraints and checkpoints)
+  * are direct calls behind [[requireFormat]]. */
 object Lake {
 
   sealed trait Format
-  case object Delta extends Format
-  case object Iceberg extends Format
+
+  /** A lake format: the operations Delta and Iceberg both implement, each
+    * the format's half of the [[Lake]] verb of the same name. `path` is
+    * the table root; a version is a Delta log version or an Iceberg
+    * snapshot id (-1 = current). `mark` is the exactly-once
+    * (appId, batchId) record a commit carries — a Delta `txn` action, or
+    * Iceberg `graft.app-id`/`graft.batch-id` snapshot-summary props — and
+    * [[marks]] reads the latest batch id per appId back. */
+  sealed abstract class TableFormat extends Format {
+    /** Lower-case name, as `USING <name>` and [[Lake.format]] spell it. */
+    def name: String
+    /** The directory under the table root that holds the log. */
+    protected def logDir: String
+    /** Whether `path` holds this format's log, i.e. the table exists — a
+      * Hadoop FileSystem probe, so `hdfs://`/`s3a://` targets are seen
+      * too (a `java.io.File` probe would miss them and re-seed a table). */
+    def exists(spark: SparkSession, path: String): Boolean = {
+      val p = new org.apache.hadoop.fs.Path(s"${path.stripSuffix("/")}/$logDir")
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    }
+    /** The current version. */
+    def version(spark: SparkSession, path: String): Long
+    /** The version current right after a [[setProperties]] made now: Delta
+      * logs properties as a commit, Iceberg rewrites only its metadata. */
+    def propertiesVersion(spark: SparkSession, path: String): Long
+    def read(spark: SparkSession, path: String, version: Long): DataFrame
+    def readPruned(spark: SparkSession, path: String,
+        keep: Map[String, Any] => Boolean, version: Long): DataFrame
+    def scanPruned(spark: SparkSession, path: String, pred: Column,
+        version: Long): (DataFrame, Long, Long)
+    def readAt(spark: SparkSession, path: String, timestampMs: Long): DataFrame
+    def versionAt(spark: SparkSession, path: String, timestampMs: Long): Long
+    /** The current schema, from metadata alone. */
+    def schema(spark: SparkSession, path: String): StructType
+    /** The current partitioning as append-ready `partitionBy`. */
+    def partitionBy(spark: SparkSession, path: String): Seq[String]
+    def properties(spark: SparkSession, path: String): Map[String, String]
+    def history(spark: SparkSession, path: String): DataFrame
+    def schemaHistory(spark: SparkSession, path: String): DataFrame
+    def fileStats(spark: SparkSession, path: String, version: Long): DataFrame
+    def countFromMetadata(spark: SparkSession, path: String, version: Long): Option[Long]
+    def partitionSummary(spark: SparkSession, path: String, version: Long): DataFrame
+    /** DESCRIBE DETAIL's (version, files, bytes, partition columns). */
+    def detail(spark: SparkSession, path: String): (Long, Long, Long, Seq[String])
+    def bucketLayoutMoR(spark: SparkSession, path: String, key: String)
+        : Option[(Int, Map[Int, Seq[(String, Long)]], LayoutDeletes)]
+    def addsBetween(spark: SparkSession, path: String, fromVersion: Long,
+        toVersion: Long, ignoreChanges: Boolean): DataFrame
+    def changesBetween(spark: SparkSession, path: String, fromVersion: Long,
+        toVersion: Long): DataFrame
+    /** The adds-only streaming tail ([[graft.streaming.LakeSources]]). */
+    def stream(spark: SparkSession, path: String): DataFrame
+    /** The changelog streaming tail ([[graft.streaming.LakeSources]]). */
+    def changelogStream(spark: SparkSession, path: String): DataFrame
+    def marks(spark: SparkSession, path: String): Map[String, Long]
+    /** The file ids [[Lake.copyInto]] has ingested (`copied` on [[append]]). */
+    def copyLedger(spark: SparkSession, path: String): Set[String]
+    def append(spark: SparkSession, df: DataFrame, path: String,
+        partitionBy: Seq[String] = Nil, mergeSchema: Boolean = false,
+        mark: Option[(String, Long)] = None, copied: Seq[String] = Nil): Long
+    def overwrite(spark: SparkSession, df: DataFrame, path: String): Long
+    def replaceWhere(spark: SparkSession, df: DataFrame, path: String, where: String): Long
+    def deleteWhere(spark: SparkSession, path: String, condition: Column,
+        alias: Option[String]): Long
+    def updateWhere(spark: SparkSession, path: String,
+        assignments: Seq[(String, Column)], condition: Column, alias: Option[String]): Long
+    def upsert(spark: SparkSession, df: DataFrame, path: String, keyCols: Seq[String]): Long
+    def applyChanges(spark: SparkSession, changes: DataFrame, path: String,
+        keyCols: Seq[String], mark: Option[(String, Long)] = None): Long
+    def compact(spark: SparkSession, path: String, smallFileBytes: Long,
+        targetFileBytes: Long, zorderBy: Seq[String], where: Option[String],
+        curve: String): Long
+    def vacuum(spark: SparkSession, path: String, retain: Int, minFileAgeMs: Long,
+        dryRun: Boolean): Seq[String]
+    def restore(spark: SparkSession, path: String, version: Long): Long
+    def cloneShallow(spark: SparkSession, source: String, target: String,
+        version: Long): Long
+    def renameColumn(spark: SparkSession, path: String, oldName: String,
+        newName: String): Unit
+    def dropColumn(spark: SparkSession, path: String, name: String): Unit
+    /** Merge `props` into the table's properties; returns the version
+      * current afterwards. */
+    def setProperties(spark: SparkSession, path: String, props: Map[String, String]): Long
+  }
+
+  case object Delta extends TableFormat {
+    val name = "delta"
+    protected val logDir = "_delta_log"
+    def version(spark: SparkSession, path: String): Long =
+      DeltaRead.snapshotInfo(spark, path).version
+    def propertiesVersion(spark: SparkSession, path: String): Long =
+      version(spark, path) + 1
+    def read(spark: SparkSession, path: String, version: Long): DataFrame =
+      DeltaRead.snapshot(spark, path, version)
+    def readPruned(spark: SparkSession, path: String,
+        keep: Map[String, Any] => Boolean, version: Long): DataFrame =
+      DeltaRead.snapshotPruned(spark, path, pv => keep(pv), version)
+    def scanPruned(spark: SparkSession, path: String, pred: Column,
+        version: Long): (DataFrame, Long, Long) =
+      DeltaRead.scanPruned(spark, path, pred, version)
+    def readAt(spark: SparkSession, path: String, timestampMs: Long): DataFrame =
+      DeltaRead.snapshotAt(spark, path, timestampMs)
+    def versionAt(spark: SparkSession, path: String, timestampMs: Long): Long =
+      DeltaRead.versionAt(spark, path, timestampMs)
+    def schema(spark: SparkSession, path: String): StructType =
+      DeltaRead.snapshotInfo(spark, path).schema
+    def partitionBy(spark: SparkSession, path: String): Seq[String] =
+      DeltaRead.snapshotInfo(spark, path).partitionColumns
+    def properties(spark: SparkSession, path: String): Map[String, String] =
+      DeltaRead.snapshotInfo(spark, path).configuration
+    def history(spark: SparkSession, path: String): DataFrame =
+      DeltaRead.history(spark, path)
+    def schemaHistory(spark: SparkSession, path: String): DataFrame =
+      DeltaRead.schemaHistory(spark, path)
+    def fileStats(spark: SparkSession, path: String, version: Long): DataFrame =
+      DeltaRead.fileStats(spark, path, version)
+    def countFromMetadata(spark: SparkSession, path: String, version: Long): Option[Long] =
+      DeltaRead.countFromMetadata(spark, path, version)
+    def partitionSummary(spark: SparkSession, path: String, version: Long): DataFrame =
+      DeltaRead.partitionSummary(spark, path, version)
+    def detail(spark: SparkSession, path: String): (Long, Long, Long, Seq[String]) = {
+      val sn = DeltaRead.snapshotInfo(spark, path)
+      (sn.version, sn.files.length.toLong, sn.files.map(_.size).sum, sn.partitionColumns)
+    }
+    def bucketLayoutMoR(spark: SparkSession, path: String, key: String)
+        : Option[(Int, Map[Int, Seq[(String, Long)]], LayoutDeletes)] =
+      DeltaRead.bucketLayoutMoR(spark, path, key)
+    def addsBetween(spark: SparkSession, path: String, fromVersion: Long,
+        toVersion: Long, ignoreChanges: Boolean): DataFrame =
+      DeltaRead.addsBetween(spark, path, fromVersion, toVersion, ignoreChanges)
+    def changesBetween(spark: SparkSession, path: String, fromVersion: Long,
+        toVersion: Long): DataFrame =
+      DeltaRead.changesBetween(spark, path, fromVersion, toVersion)
+    def stream(spark: SparkSession, path: String): DataFrame =
+      graft.streaming.LakeSources.delta(spark, path)
+    def changelogStream(spark: SparkSession, path: String): DataFrame =
+      graft.streaming.LakeSources.deltaChangelog(spark, path)
+    def marks(spark: SparkSession, path: String): Map[String, Long] =
+      DeltaRead.txnVersions(spark, path)
+    def copyLedger(spark: SparkSession, path: String): Set[String] =
+      DeltaRead.txnVersions(spark, path).keySet
+        .collect { case k if k.startsWith(CopyPrefix) => k.stripPrefix(CopyPrefix) }
+    /** One `txn` action per copied file id: the ledger survives checkpoints. */
+    private val CopyPrefix = "graft-copy:"
+    def append(spark: SparkSession, df: DataFrame, path: String,
+        partitionBy: Seq[String], mergeSchema: Boolean,
+        mark: Option[(String, Long)], copied: Seq[String]): Long =
+      DeltaWrite.append(spark, df, path, partitionBy, txn = mark, mergeSchema = mergeSchema,
+        txns = copied.map(id => (s"$CopyPrefix$id", 1L)))
+    def overwrite(spark: SparkSession, df: DataFrame, path: String): Long =
+      DeltaWrite.overwrite(spark, df, path)
+    def replaceWhere(spark: SparkSession, df: DataFrame, path: String, where: String): Long =
+      DeltaWrite.replaceWhere(spark, df, path, where)
+    def deleteWhere(spark: SparkSession, path: String, condition: Column,
+        alias: Option[String]): Long =
+      DeltaWrite.deleteWhere(spark, path, condition, alias)
+    def updateWhere(spark: SparkSession, path: String,
+        assignments: Seq[(String, Column)], condition: Column, alias: Option[String]): Long =
+      DeltaWrite.updateWhere(spark, path, assignments, condition, alias)
+    def upsert(spark: SparkSession, df: DataFrame, path: String, keyCols: Seq[String]): Long =
+      DeltaWrite.upsert(spark, df, path, keyCols)
+    def applyChanges(spark: SparkSession, changes: DataFrame, path: String,
+        keyCols: Seq[String], mark: Option[(String, Long)]): Long =
+      DeltaWrite.applyChanges(spark, changes, path, keyCols, txn = mark)
+    def compact(spark: SparkSession, path: String, smallFileBytes: Long,
+        targetFileBytes: Long, zorderBy: Seq[String], where: Option[String],
+        curve: String): Long =
+      DeltaWrite.compact(spark, path, smallFileBytes, targetFileBytes, zorderBy, where, curve)
+    def vacuum(spark: SparkSession, path: String, retain: Int, minFileAgeMs: Long,
+        dryRun: Boolean): Seq[String] =
+      DeltaWrite.vacuum(spark, path, retain, minFileAgeMs, dryRun)
+    def restore(spark: SparkSession, path: String, version: Long): Long =
+      DeltaWrite.restore(spark, path, version)
+    def cloneShallow(spark: SparkSession, source: String, target: String,
+        version: Long): Long =
+      DeltaWrite.cloneShallow(spark, source, target, version)
+    def renameColumn(spark: SparkSession, path: String, oldName: String,
+        newName: String): Unit =
+      DeltaWrite.renameColumn(spark, path, oldName, newName)
+    def dropColumn(spark: SparkSession, path: String, name: String): Unit =
+      DeltaWrite.dropColumn(spark, path, name)
+    def setProperties(spark: SparkSession, path: String, props: Map[String, String]): Long =
+      DeltaWrite.setProperties(spark, path, props)
+  }
+
+  case object Iceberg extends TableFormat {
+    val name = "iceberg"
+    protected val logDir = "metadata"
+    def version(spark: SparkSession, path: String): Long =
+      IcebergRead.currentSnapshotId(spark, path)
+    def propertiesVersion(spark: SparkSession, path: String): Long = version(spark, path)
+    def read(spark: SparkSession, path: String, version: Long): DataFrame =
+      IcebergRead.snapshot(spark, path, version)
+    def readPruned(spark: SparkSession, path: String,
+        keep: Map[String, Any] => Boolean, version: Long): DataFrame =
+      IcebergRead.snapshotPruned(spark, path, keep, version)
+    def scanPruned(spark: SparkSession, path: String, pred: Column,
+        version: Long): (DataFrame, Long, Long) =
+      IcebergRead.scanPruned(spark, path, pred, version)
+    def readAt(spark: SparkSession, path: String, timestampMs: Long): DataFrame =
+      IcebergRead.snapshotAt(spark, path, timestampMs)
+    def versionAt(spark: SparkSession, path: String, timestampMs: Long): Long =
+      IcebergRead.snapshotIdAt(spark, path, timestampMs)
+    // metadata-only: building the snapshot DataFrame for `.schema` re-reads
+    // every manifest and lists every data file
+    def schema(spark: SparkSession, path: String): StructType =
+      IcebergRead.snapshotSchema(path)
+    def partitionBy(spark: SparkSession, path: String): Seq[String] =
+      IcebergWrite.currentPartitionBy(spark, path)
+    def properties(spark: SparkSession, path: String): Map[String, String] =
+      IcebergRead.tableProperties(spark, path)
+    def history(spark: SparkSession, path: String): DataFrame =
+      IcebergRead.history(spark, path)
+    def schemaHistory(spark: SparkSession, path: String): DataFrame =
+      IcebergRead.schemaHistory(spark, path)
+    def fileStats(spark: SparkSession, path: String, version: Long): DataFrame =
+      IcebergRead.fileStats(spark, path, version)
+    def countFromMetadata(spark: SparkSession, path: String, version: Long): Option[Long] =
+      IcebergRead.countFromMetadata(spark, path, version)
+    def partitionSummary(spark: SparkSession, path: String, version: Long): DataFrame =
+      IcebergRead.partitionSummary(spark, path, version)
+    // -1 counts under live merge-on-read deletes: metadata would overstate
+    def detail(spark: SparkSession, path: String): (Long, Long, Long, Seq[String]) = {
+      val v = IcebergRead.currentSnapshotId(spark, path)
+      val (nf, b) = scala.util.Try {
+        val r = IcebergRead.partitionSummary(spark, path)
+          .agg(org.apache.spark.sql.functions.sum("n_files"),
+            org.apache.spark.sql.functions.sum("bytes")).head()
+        (r.getLong(0), r.getLong(1))
+      }.getOrElse((-1L, -1L))
+      (v, nf, b, IcebergWrite.currentPartitionBy(spark, path))
+    }
+    def bucketLayoutMoR(spark: SparkSession, path: String, key: String)
+        : Option[(Int, Map[Int, Seq[(String, Long)]], LayoutDeletes)] =
+      IcebergRead.bucketLayoutMoR(spark, path, key)
+    def addsBetween(spark: SparkSession, path: String, fromVersion: Long,
+        toVersion: Long, ignoreChanges: Boolean): DataFrame =
+      IcebergRead.addsBetween(spark, path, fromVersion, toVersion, ignoreChanges)
+    def changesBetween(spark: SparkSession, path: String, fromVersion: Long,
+        toVersion: Long): DataFrame =
+      IcebergRead.changesBetween(spark, path, fromVersion, toVersion)
+    def stream(spark: SparkSession, path: String): DataFrame =
+      graft.streaming.LakeSources.iceberg(spark, path)
+    def changelogStream(spark: SparkSession, path: String): DataFrame =
+      graft.streaming.LakeSources.icebergChangelog(spark, path)
+    def marks(spark: SparkSession, path: String): Map[String, Long] =
+      IcebergRead.txnVersions(spark, path)
+    def copyLedger(spark: SparkSession, path: String): Set[String] =
+      IcebergRead.copyLedger(spark, path)
+    private def summary(mark: Option[(String, Long)]): Map[String, String] =
+      mark.map { case (app, batch) =>
+        Map("graft.app-id" -> app, "graft.batch-id" -> batch.toString)
+      }.getOrElse(Map.empty)
+    def append(spark: SparkSession, df: DataFrame, path: String,
+        partitionBy: Seq[String], mergeSchema: Boolean,
+        mark: Option[(String, Long)], copied: Seq[String]): Long =
+      IcebergWrite.append(spark, df, path, partitionBy, mergeSchema,
+        summaryProps = summary(mark) ++
+          (if (copied.isEmpty) Map.empty else Map("graft.copied" -> copied.mkString(","))))
+    def overwrite(spark: SparkSession, df: DataFrame, path: String): Long =
+      IcebergWrite.overwrite(spark, df, path)
+    def replaceWhere(spark: SparkSession, df: DataFrame, path: String, where: String): Long =
+      IcebergWrite.replaceWhere(spark, df, path, where)
+    def deleteWhere(spark: SparkSession, path: String, condition: Column,
+        alias: Option[String]): Long =
+      IcebergWrite.deleteWhere(spark, path, condition, alias)
+    def updateWhere(spark: SparkSession, path: String,
+        assignments: Seq[(String, Column)], condition: Column, alias: Option[String]): Long =
+      IcebergWrite.updateWhere(spark, path, assignments, condition, alias)
+    def upsert(spark: SparkSession, df: DataFrame, path: String, keyCols: Seq[String]): Long =
+      IcebergWrite.upsert(spark, df, path, keyCols)
+    def applyChanges(spark: SparkSession, changes: DataFrame, path: String,
+        keyCols: Seq[String], mark: Option[(String, Long)]): Long =
+      IcebergWrite.applyChanges(spark, changes, path, keyCols, summary(mark))
+    def compact(spark: SparkSession, path: String, smallFileBytes: Long,
+        targetFileBytes: Long, zorderBy: Seq[String], where: Option[String],
+        curve: String): Long =
+      IcebergWrite.compact(spark, path, smallFileBytes, targetFileBytes, zorderBy, where, curve)
+    def vacuum(spark: SparkSession, path: String, retain: Int, minFileAgeMs: Long,
+        dryRun: Boolean): Seq[String] =
+      IcebergWrite.expireSnapshots(spark, path, retain, minFileAgeMs, dryRun)
+    def restore(spark: SparkSession, path: String, version: Long): Long =
+      IcebergWrite.rollback(spark, path, version)
+    def cloneShallow(spark: SparkSession, source: String, target: String,
+        version: Long): Long =
+      IcebergWrite.cloneShallow(spark, source, target, version)
+    def renameColumn(spark: SparkSession, path: String, oldName: String,
+        newName: String): Unit =
+      IcebergWrite.renameColumn(spark, path, oldName, newName)
+    def dropColumn(spark: SparkSession, path: String, name: String): Unit =
+      IcebergWrite.dropColumn(spark, path, name)
+    def setProperties(spark: SparkSession, path: String, props: Map[String, String]): Long = {
+      IcebergWrite.setProperties(spark, path, props)
+      version(spark, path)
+    }
+  }
+
   case object Parquet extends Format
 
   def detect(spark: SparkSession, path: String): Format = {
@@ -73,16 +373,48 @@ object Lake {
     }
   }
 
+  /** The lake format at `path`, or None for a plain parquet directory. */
+  def tableOption(spark: SparkSession, path: String): Option[TableFormat] =
+    detect(spark, path) match {
+      case t: TableFormat => Some(t)
+      case _ => None
+    }
+
+  /** The lake format at `path` — the one refusal point for plain parquet,
+    * which has no transaction log to read versions from or commit to. */
+  def table(spark: SparkSession, path: String): TableFormat =
+    tableOption(spark, path).getOrElse(throw new IllegalArgumentException(
+      s"plain parquet at $path has no transaction log — this needs a Delta or Iceberg table"))
+
+  /** Parse a `targetFormat`/`USING`/`TO` format name (case-insensitive). */
+  def format(name: String): TableFormat = name.toLowerCase(java.util.Locale.ROOT) match {
+    case "delta" => Delta
+    case "iceberg" => Iceberg
+    case other => throw new IllegalArgumentException(
+      s"unsupported lake format '$other' (delta | iceberg)")
+  }
+
+  /** The one check in front of a verb only `want` has. */
+  private[graft] def requireFormat(spark: SparkSession, path: String, want: TableFormat,
+      what: String): Unit = {
+    val got = detect(spark, path)
+    if (got != want) throw new IllegalArgumentException(
+      s"$what needs a ${want.name} table, got $got at $path")
+  }
+
+  /** A plain parquet directory read; it has no versions to pin. */
+  private def parquetDir(spark: SparkSession, path: String, version: Long): DataFrame = {
+    require(version < 0, s"plain parquet at $path has no versions (asked for $version)")
+    spark.read.parquet(path)
+  }
+
   /** Read `path` at an optional version: Delta log version, Iceberg
     * snapshot id, or ignored for plain parquet (which has no versions —
     * asking for one there fails loudly). */
   def read(spark: SparkSession, path: String, version: Long = -1L): DataFrame =
-    detect(spark, path) match {
-      case Delta => DeltaRead.snapshot(spark, path, version)
-      case Iceberg => IcebergRead.snapshot(spark, path, version)
-      case Parquet =>
-        require(version < 0, s"plain parquet at $path has no versions (asked for $version)")
-        spark.read.parquet(path)
+    tableOption(spark, path) match {
+      case Some(t) => t.read(spark, path, version)
+      case None => parquetDir(spark, path, version)
     }
 
   /** [[read]] with partition pruning at the metadata level: `keep` sees
@@ -92,13 +424,9 @@ object Lake {
     * read (Spark's own directory partition discovery prunes there). */
   def readPruned(spark: SparkSession, path: String,
       keep: Map[String, Any] => Boolean, version: Long = -1L): DataFrame =
-    detect(spark, path) match {
-      case Delta => DeltaRead.snapshotPruned(spark, path,
-        pv => keep(pv.asInstanceOf[Map[String, Any]]), version)
-      case Iceberg => IcebergRead.snapshotPruned(spark, path, keep, version)
-      case Parquet =>
-        require(version < 0, s"plain parquet at $path has no versions (asked for $version)")
-        spark.read.parquet(path)
+    tableOption(spark, path) match {
+      case Some(t) => t.readPruned(spark, path, keep, version)
+      case None => parquetDir(spark, path, version)
     }
 
   /** STATS-PRUNED scan dispatch: translate a value predicate against the
@@ -111,12 +439,10 @@ object Lake {
   def scanPruned(spark: SparkSession, path: String,
       pred: org.apache.spark.sql.Column, version: Long = -1L)
       : (DataFrame, Long, Long) =
-    detect(spark, path) match {
-      case Delta => DeltaRead.scanPruned(spark, path, pred, version)
-      case Iceberg => IcebergRead.scanPruned(spark, path, pred, version)
-      case Parquet =>
-        require(version < 0, s"plain parquet at $path has no versions (asked for $version)")
-        val df = spark.read.parquet(path)
+    tableOption(spark, path) match {
+      case Some(t) => t.scanPruned(spark, path, pred, version)
+      case None =>
+        val df = parquetDir(spark, path, version)
         val n = df.inputFiles.length.toLong
         (df.where(pred), n, n)
     }
@@ -125,33 +451,18 @@ object Lake {
     * snapshot in commit order — (version, timestamp_ms, operation,
     * added_files, removed_files). Plain parquet has no log — refused. */
   def history(spark: SparkSession, path: String): DataFrame =
-    detect(spark, path) match {
-      case Delta => DeltaRead.history(spark, path)
-      case Iceberg => IcebergRead.history(spark, path)
-      case Parquet => throw new IllegalArgumentException(
-        s"plain parquet at $path has no commit history")
-    }
+    table(spark, path).history(spark, path)
 
   /** Column RENAME dispatch — metadata-only on both formats (Delta via
     * column mapping, Iceberg via field-id schema evolution); no data file
     * is rewritten at any scale. */
   def renameColumn(spark: SparkSession, path: String,
       oldName: String, newName: String): Unit =
-    detect(spark, path) match {
-      case Delta => DeltaWrite.renameColumn(spark, path, oldName, newName)
-      case Iceberg => IcebergWrite.renameColumn(spark, path, oldName, newName)
-      case Parquet => throw new IllegalArgumentException(
-        s"plain parquet at $path has no schema metadata to rename in — rewrite the files")
-    }
+    table(spark, path).renameColumn(spark, path, oldName, newName)
 
   /** Column DROP dispatch — metadata-only twin of [[renameColumn]]. */
   def dropColumn(spark: SparkSession, path: String, name: String): Unit =
-    detect(spark, path) match {
-      case Delta => DeltaWrite.dropColumn(spark, path, name)
-      case Iceberg => IcebergWrite.dropColumn(spark, path, name)
-      case Parquet => throw new IllegalArgumentException(
-        s"plain parquet at $path has no schema metadata to drop from — rewrite the files")
-    }
+    table(spark, path).dropColumn(spark, path, name)
 
   /** Column ADD dispatch — metadata-only on both formats: commits an
     * EMPTY evolving append (zero staged data files, so the commit carries
@@ -164,7 +475,8 @@ object Lake {
     * the committed version / snapshot id. */
   def addColumn(spark: SparkSession, path: String, name: String,
       sqlType: String): Long = {
-    val cur = read(spark, path)
+    val t = table(spark, path)
+    val cur = t.read(spark, path, -1L)
     require(!cur.columns.contains(name),
       s"ADD COLUMN: '$name' already exists at $path")
     val dt = org.apache.spark.sql.types.DataType.fromDDL(sqlType)
@@ -175,16 +487,7 @@ object Lake {
     // carries the evolved metadata and no add entries
     val empty = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq.empty[org.apache.spark.sql.Row], 1), evolved)
-    detect(spark, path) match {
-      case Delta => DeltaWrite.append(spark, empty, path,
-        partitionBy = DeltaRead.snapshotInfo(spark, path).partitionColumns,
-        mergeSchema = true)
-      case Iceberg => IcebergWrite.append(spark, empty, path,
-        partitionBy = IcebergWrite.currentPartitionBy(spark, path),
-        mergeSchema = true)
-      case Parquet => throw new IllegalArgumentException(
-        s"plain parquet at $path has no schema metadata to evolve — rewrite the files")
-    }
+    t.append(spark, empty, path, partitionBy = t.partitionBy(spark, path), mergeSchema = true)
   }
 
   /** CONVERT TO DELTA dispatch: in-place zero-rewrite migration of a
@@ -219,12 +522,7 @@ object Lake {
     * remain until expireSnapshots). Returns the now-current
     * version/snapshot id. */
   def restore(spark: SparkSession, path: String, version: Long): Long =
-    detect(spark, path) match {
-      case Delta => DeltaWrite.restore(spark, path, version)
-      case Iceberg => IcebergWrite.rollback(spark, path, version)
-      case Parquet => throw new IllegalArgumentException(
-        s"plain parquet at $path has no versions to restore")
-    }
+    table(spark, path).restore(spark, path, version)
 
   /** SHALLOW-CLONE dispatch: zero-copy snapshot of a lake table into a
     * NEW independently-writable table at `target` — the source's live
@@ -235,12 +533,7 @@ object Lake {
     * reference — refused (copy it, or ingest it into a lake format). */
   def clone(spark: SparkSession, source: String, target: String,
       version: Long = -1L): Long =
-    detect(spark, source) match {
-      case Delta => DeltaWrite.cloneShallow(spark, source, target, version)
-      case Iceberg => IcebergWrite.cloneShallow(spark, source, target, version)
-      case Parquet => throw new IllegalArgumentException(
-        s"plain parquet at $source cannot be shallow-cloned (no log)")
-    }
+    table(spark, source).cloneShallow(spark, source, target, version)
 
   /** SCHEMA-HISTORY dispatch: one row per column-level change in commit
     * order — (version, change, column, old_type, new_type), change ∈
@@ -249,12 +542,7 @@ object Lake {
     * drop+add). The drift canary for downstream consumers of a shared
     * table. Plain parquet has no schema lineage — refused. */
   def schemaHistory(spark: SparkSession, path: String): DataFrame =
-    detect(spark, path) match {
-      case Delta => DeltaRead.schemaHistory(spark, path)
-      case Iceberg => IcebergRead.schemaHistory(spark, path)
-      case Parquet => throw new IllegalArgumentException(
-        s"plain parquet at $path has no schema history")
-    }
+    table(spark, path).schemaHistory(spark, path)
 
   /** Per-file STATS dispatch ([[DeltaRead.fileStats]] /
     * [[IcebergRead.fileStats]]): one row per live file with decoded
@@ -262,12 +550,7 @@ object Lake {
     * [[scanPruned]]. Plain parquet persists no stats — refused (use
     * [[graft.operators.DataSkipping.collectStats]] to retrofit). */
   def fileStats(spark: SparkSession, path: String, version: Long = -1L): DataFrame =
-    detect(spark, path) match {
-      case Delta => DeltaRead.fileStats(spark, path, version)
-      case Iceberg => IcebergRead.fileStats(spark, path, version)
-      case Parquet => throw new IllegalArgumentException(
-        s"plain parquet at $path persists no per-file stats")
-    }
+    table(spark, path).fileStats(spark, path, version)
 
   /** METADATA-ONLY COUNT dispatch: the table's exact row count from the
     * transaction log / manifests alone — zero data files opened, so at
@@ -278,11 +561,7 @@ object Lake {
     * or plain parquet (no log at all). Returns (count, fromMetadata). */
   def rowCount(spark: SparkSession, path: String,
       version: Long = -1L): (Long, Boolean) = {
-    val meta = detect(spark, path) match {
-      case Delta => DeltaRead.countFromMetadata(spark, path, version)
-      case Iceberg => IcebergRead.countFromMetadata(spark, path, version)
-      case Parquet => None
-    }
+    val meta = tableOption(spark, path).flatMap(_.countFromMetadata(spark, path, version))
     meta.map((_, true)).getOrElse((read(spark, path, version).count(), false))
   }
 
@@ -293,47 +572,26 @@ object Lake {
     * no authoritative per-file metadata — refused. */
   def partitionSummary(spark: SparkSession, path: String,
       version: Long = -1L): DataFrame =
-    detect(spark, path) match {
-      case Delta => DeltaRead.partitionSummary(spark, path, version)
-      case Iceberg => IcebergRead.partitionSummary(spark, path, version)
-      case Parquet => throw new IllegalArgumentException(
-        s"plain parquet at $path persists no per-file row counts — " +
-          "read and group instead")
-    }
+    table(spark, path).partitionSummary(spark, path, version)
 
   /** TIMESTAMP AS OF dispatch: the table as of a wall-clock ms timestamp
     * (Delta: commit modification times; Iceberg: snapshot timestamp-ms).
     * Plain parquet has no history — refused loudly. */
   def readAt(spark: SparkSession, path: String, timestampMs: Long): DataFrame =
-    detect(spark, path) match {
-      case Delta => DeltaRead.snapshotAt(spark, path, timestampMs)
-      case Iceberg => IcebergRead.snapshotAt(spark, path, timestampMs)
-      case Parquet => throw new IllegalArgumentException(
-        s"plain parquet at $path has no version history for TIMESTAMP AS OF")
-    }
+    table(spark, path).readAt(spark, path, timestampMs)
 
   /** Resolve a wall-clock ms timestamp to the version/snapshot id
     * current at that instant — what lets TIMESTAMP AS OF flow through
     * every version-parameterized path (pruned scans, temp views). */
   def versionAt(spark: SparkSession, path: String, timestampMs: Long): Long =
-    detect(spark, path) match {
-      case Delta => DeltaRead.versionAt(spark, path, timestampMs)
-      case Iceberg => IcebergRead.snapshotIdAt(spark, path, timestampMs)
-      case Parquet => throw new IllegalArgumentException(
-        s"plain parquet at $path has no version history for TIMESTAMP AS OF")
-    }
+    table(spark, path).versionAt(spark, path, timestampMs)
 
   /** Incremental-read dispatch: rows added after `fromVersion` (Delta log
     * version / Iceberg snapshot id), scanning only the new files. Plain
     * parquet has no commit history — refused loudly. */
   def addsBetween(spark: SparkSession, path: String, fromVersion: Long,
       toVersion: Long = -1L, ignoreChanges: Boolean = false): DataFrame =
-    detect(spark, path) match {
-      case Delta => DeltaRead.addsBetween(spark, path, fromVersion, toVersion, ignoreChanges)
-      case Iceberg => IcebergRead.addsBetween(spark, path, fromVersion, toVersion, ignoreChanges)
-      case Parquet => throw new IllegalArgumentException(
-        s"plain parquet at $path has no commit history for incremental reads")
-    }
+    table(spark, path).addsBetween(spark, path, fromVersion, toVersion, ignoreChanges)
 
   /** CHANGELOG dispatch: rows inserted AND deleted between two versions
     * (Delta log versions / Iceberg snapshot ids), as the table's columns
@@ -342,12 +600,7 @@ object Lake {
     * loudly. */
   def changesBetween(spark: SparkSession, path: String, fromVersion: Long,
       toVersion: Long = -1L): DataFrame =
-    detect(spark, path) match {
-      case Delta => DeltaRead.changesBetween(spark, path, fromVersion, toVersion)
-      case Iceberg => IcebergRead.changesBetween(spark, path, fromVersion, toVersion)
-      case Parquet => throw new IllegalArgumentException(
-        s"plain parquet at $path has no commit history for changelog reads")
-    }
+    table(spark, path).changesBetween(spark, path, fromVersion, toVersion)
 
   /** Merge-on-read DELETE dispatch: Delta deletion vectors or Iceberg
     * position deletes. Plain parquet has no transaction log to carry a
@@ -355,12 +608,7 @@ object Lake {
   def deleteWhere(spark: SparkSession, path: String,
       condition: org.apache.spark.sql.Column,
       alias: Option[String] = None): Long =
-    detect(spark, path) match {
-      case Delta => DeltaWrite.deleteWhere(spark, path, condition, alias)
-      case Iceberg => IcebergWrite.deleteWhere(spark, path, condition, alias)
-      case Parquet => throw new IllegalArgumentException(
-        s"plain parquet at $path cannot carry a merge-on-read delete")
-    }
+    table(spark, path).deleteWhere(spark, path, condition, alias)
 
   /** SQL surface: registers the table-valued functions
     *
@@ -395,11 +643,8 @@ object Lake {
         val path = str(args.head, s"$name: path")
         val df = args.lift(1) match {
           case Some(Literal(v, org.apache.spark.sql.types.StringType)) if v != null =>
-            detect(spark, path) match {
-              case Iceberg => IcebergRead.snapshotAtRef(spark, path, v.toString)
-              case other => throw new IllegalArgumentException(
-                s"$name: ref-name reads need an Iceberg table, got $other at $path")
-            }
+            requireFormat(spark, path, Iceberg, s"$name: a ref-name read")
+            IcebergRead.snapshotAtRef(spark, path, v.toString)
           case Some(e) => reader(path, num(e, s"$name: version"))
           case None => reader(path, -1L)
         }
@@ -561,17 +806,8 @@ object Lake {
       smallFileBytes: Long = 64L << 20, targetFileBytes: Long = 128L << 20,
       zorderBy: Seq[String] = Nil, where: Option[String] = None,
       curve: String = "z"): Long =
-    detect(spark, path) match {
-      case Delta =>
-        DeltaWrite.compact(spark, path, smallFileBytes, targetFileBytes, zorderBy, where,
-          curve)
-      case Iceberg =>
-        IcebergWrite.compact(spark, path, smallFileBytes, targetFileBytes, zorderBy, where,
-          curve)
-      case Parquet => throw new IllegalArgumentException(
-        s"plain parquet at $path has no log for an atomic rewrite — " +
-          "use Layout.compact to re-lay a copy")
-    }
+    table(spark, path).compact(spark, path, smallFileBytes, targetFileBytes, zorderBy, where,
+      curve)
 
   /** PARTITION-SPEC EVOLUTION dispatch: Iceberg changes its default spec
     * as a metadata-only commit ([[IcebergWrite.evolvePartitionSpec]]);
@@ -580,16 +816,11 @@ object Lake {
     * for the cheap form is refused loudly rather than silently rewriting
     * terabytes. */
   def evolvePartitionSpec(spark: SparkSession, path: String,
-      newPartitionBy: Seq[String]): Unit =
-    detect(spark, path) match {
-      case Iceberg => IcebergWrite.evolvePartitionSpec(spark, path, newPartitionBy)
-      case Delta => throw new IllegalArgumentException(
-        s"Delta at $path has no metadata-only partition evolution — " +
-          "changing a Delta table's partitioning is a rewrite " +
-          "(overwrite with the new partitionBy)")
-      case Parquet => throw new IllegalArgumentException(
-        s"plain parquet at $path has no partition spec to evolve")
-    }
+      newPartitionBy: Seq[String]): Unit = {
+    requireFormat(spark, path, Iceberg, "metadata-only partition evolution (a Delta " +
+      "table repartitions by overwrite with the new partitionBy)")
+    IcebergWrite.evolvePartitionSpec(spark, path, newPartitionBy)
+  }
 
   /** WRITE-AUDIT-PUBLISH dispatch: stage an append on an audit branch /
     * publish it by fast-forwarding the head — Iceberg-only (branch refs
@@ -597,20 +828,16 @@ object Lake {
     * snapshots, so the WAP pattern there is a shallow clone audited and
     * merged explicitly). */
   def appendStaged(spark: SparkSession, df: DataFrame, path: String,
-      branch: String): Long =
-    detect(spark, path) match {
-      case Iceberg => IcebergWrite.appendStaged(spark, df, path, branch)
-      case other => throw new IllegalArgumentException(
-        s"write-audit-publish needs an Iceberg table (branch refs), got $other at $path — " +
-          "for Delta, audit on a shallow clone and apply explicitly")
-    }
+      branch: String): Long = {
+    requireFormat(spark, path, Iceberg, "write-audit-publish (branch refs; for Delta, " +
+      "audit on a shallow clone and apply explicitly)")
+    IcebergWrite.appendStaged(spark, df, path, branch)
+  }
 
-  def fastForward(spark: SparkSession, path: String, branch: String): Long =
-    detect(spark, path) match {
-      case Iceberg => IcebergWrite.fastForward(spark, path, branch)
-      case other => throw new IllegalArgumentException(
-        s"fastForward needs an Iceberg table (branch refs), got $other at $path")
-    }
+  def fastForward(spark: SparkSession, path: String, branch: String): Long = {
+    requireFormat(spark, path, Iceberg, "fastForward (branch refs)")
+    IcebergWrite.fastForward(spark, path, branch)
+  }
 
   /** VACUUM dispatch: physically reclaim files no retained version /
     * snapshot references — the cleanup half [[compact]] defers. Delta
@@ -621,12 +848,7 @@ object Lake {
   def vacuum(spark: SparkSession, path: String, retain: Int = 1,
       minFileAgeMs: Long = 24L * 3600 * 1000,
       dryRun: Boolean = false): Seq[String] =
-    detect(spark, path) match {
-      case Delta => DeltaWrite.vacuum(spark, path, retain, minFileAgeMs, dryRun)
-      case Iceberg => IcebergWrite.expireSnapshots(spark, path, retain, minFileAgeMs, dryRun)
-      case Parquet => throw new IllegalArgumentException(
-        s"plain parquet at $path has no version history to vacuum against")
-    }
+    table(spark, path).vacuum(spark, path, retain, minFileAgeMs, dryRun)
 
   /** INCREMENTAL REFRESH driver: make the keyed `target` table follow
     * `source` by applying `changesBetween(lastSynced, frontier)`, with the
@@ -647,32 +869,16 @@ object Lake {
       keyCols: Seq[String], appId: String = ""): Long = {
     import org.apache.spark.sql.functions.lit
     val app = if (appId.nonEmpty) appId else s"graft-sync:${source.stripSuffix("/")}"
-    val frontier = detect(spark, source) match {
-      case Delta => DeltaRead.snapshotInfo(spark, source).version
-      case Iceberg => IcebergRead.currentSnapshotId(spark, source)
-      case Parquet => throw new IllegalArgumentException(
-        s"plain parquet at $source has no version history to sync from")
-    }
-    val marks = detect(spark, target) match {
-      case Delta => DeltaRead.txnVersions(spark, target)
-      case Iceberg => IcebergRead.txnVersions(spark, target)
-      case Parquet => throw new IllegalArgumentException(
-        s"plain parquet at $target cannot persist sync marks")
-    }
-    def apply(changes: org.apache.spark.sql.DataFrame): Unit = detect(spark, target) match {
-      case Delta =>
-        DeltaWrite.applyChanges(spark, changes, target, keyCols,
-          txn = Some((app, frontier)))
-      case Iceberg =>
-        IcebergWrite.applyChanges(spark, changes, target, keyCols,
-          summaryProps = Map("graft.app-id" -> app, "graft.batch-id" -> frontier.toString))
-      case Parquet => () // unreachable: marks dispatch refused already
-    }
-    marks.get(app) match {
+    val src = table(spark, source)
+    val frontier = src.version(spark, source)
+    val tgt = table(spark, target)
+    def apply(changes: DataFrame): Unit =
+      tgt.applyChanges(spark, changes, target, keyCols, mark = Some((app, frontier)))
+    tgt.marks(spark, target).get(app) match {
       case Some(last) if last == frontier => () // up to date: no commit
-      case Some(last) => apply(changesBetween(spark, source, last, frontier))
+      case Some(last) => apply(src.changesBetween(spark, source, last, frontier))
       case None => // first sync: the current state as one insert changelog
-        apply(read(spark, source, frontier).withColumn("_change_type", lit("insert")))
+        apply(src.read(spark, source, frontier).withColumn("_change_type", lit("insert")))
     }
     frontier
   }
@@ -684,12 +890,7 @@ object Lake {
     * interchange). Plain parquet has no transaction log — refused. */
   def applyChanges(spark: SparkSession, changes: DataFrame, path: String,
       keyCols: Seq[String]): Long =
-    detect(spark, path) match {
-      case Delta => DeltaWrite.applyChanges(spark, changes, path, keyCols)
-      case Iceberg => IcebergWrite.applyChanges(spark, changes, path, keyCols)
-      case Parquet => throw new IllegalArgumentException(
-        s"plain parquet at $path cannot carry a changelog apply")
-    }
+    table(spark, path).applyChanges(spark, changes, path, keyCols)
 
   /** One WHEN clause of a full MERGE ([[mergeInto]]). */
   sealed trait MergeAction
@@ -958,18 +1159,11 @@ object Lake {
     // never re-ingests a table's already-copied files
     def legacyFid(st: org.apache.hadoop.fs.FileStatus): String =
       md5_16(st.getPath.toUri.getPath)
-    val fmtKind = detect(spark, path)
-    val ledger: Set[String] = fmtKind match {
-      case Delta => DeltaRead.txnVersions(spark, path).keySet
-        .collect { case k if k.startsWith("graft-copy:") =>
-          k.stripPrefix("graft-copy:") }
-      case Iceberg => IcebergRead.copyLedger(spark, path)
-      case Parquet => throw new IllegalArgumentException(
-        s"COPY INTO needs a lake table (the ledger rides its commits), got parquet at $path")
-    }
+    val t = table(spark, path)
+    val ledger = t.copyLedger(spark, path)
     val fresh = files.filterNot(st =>
       ledger.contains(fid(st)) || ledger.contains(legacyFid(st)))
-    if (fresh.isEmpty) return (versionOf(spark, path), 0L)
+    if (fresh.isEmpty) return (t.version(spark, path), 0L)
     val names = fresh.map(_.getPath.toString)
     val raw = fmt match {
       case "parquet" => spark.read.parquet(names: _*)
@@ -977,7 +1171,7 @@ object Lake {
       case "json" => spark.read.json(names: _*)
       case "avro" => AvroIo.readFiles(spark, names)
     }
-    val target0 = read(spark, path).schema
+    val target0 = t.read(spark, path, -1L).schema
     val missing = target0.fieldNames.filterNot(raw.columns.contains)
     require(missing.isEmpty,
       s"COPY INTO: source files miss table columns ${missing.mkString(",")} " +
@@ -993,15 +1187,8 @@ object Lake {
     val target = org.apache.spark.sql.types.StructType(target0.fields ++ extras)
     val conformed = raw.select(target.fields.toSeq.map(f =>
       col(f.name).cast(f.dataType).as(f.name)): _*)
-    val v = fmtKind match {
-      case Delta => DeltaWrite.append(spark, conformed, path,
-        partitionBy = DeltaRead.snapshotInfo(spark, path).partitionColumns,
-        txns = fresh.map(st => (s"graft-copy:${fid(st)}", 1L)))
-      case Iceberg => IcebergWrite.append(spark, conformed, path,
-        partitionBy = IcebergWrite.currentPartitionBy(spark, path),
-        summaryProps = Map("graft.copied" -> fresh.map(fid).mkString(",")))
-      case Parquet => throw new IllegalStateException("unreachable")
-    }
+    val v = t.append(spark, conformed, path, partitionBy = t.partitionBy(spark, path),
+      copied = fresh.map(fid))
     (v, fresh.length.toLong)
   }
 
@@ -1065,9 +1252,8 @@ object Lake {
     * after large writes; consumers check the stamped version. */
   def analyzeTable(spark: SparkSession, path: String): Long = {
     import org.apache.spark.sql.functions.{approx_count_distinct, col, count, lit, sum, when}
-    require(detect(spark, path) != Parquet,
-      s"ANALYZE TABLE needs a lake table (stats ride its metadata), got parquet at $path")
-    val df = read(spark, path)
+    val t = table(spark, path)
+    val df = t.read(spark, path, -1L)
     val cols = df.schema.fields.toSeq.filter(_.dataType match {
       case _: org.apache.spark.sql.types.ArrayType |
            _: org.apache.spark.sql.types.MapType |
@@ -1150,34 +1336,25 @@ object Lake {
         histJson.getOrElse(f.name, "") + "}"
     }.mkString("{", ",", "}")
     // version stamp = what versionOf reports right AFTER this statement:
-    // Delta's properties commit claims head+1 (a racing interleaved commit
-    // makes the stamp mismatch → consumers safely ignore the stats);
-    // Iceberg's metadata-only bump leaves the snapshot id untouched. A
-    // later DATA commit moves the head past the stamp either way, which
-    // is exactly the staleness signal the broadcast gate checks.
-    val stamped = detect(spark, path) match {
-      case Delta => versionOf(spark, path) + 1
-      case _ => versionOf(spark, path)
-    }
+    // a racing interleaved Delta commit makes the stamp mismatch →
+    // consumers safely ignore the stats. A later DATA commit moves the
+    // head past the stamp on either format, which is exactly the
+    // staleness signal the broadcast gate checks.
+    val stamped = t.propertiesVersion(spark, path)
     val json = s"""{"rows":${row.getLong(0)},"bytes":$bytes,""" +
       s""""version":$stamped,"cols":$colJson}"""
-    detect(spark, path) match {
-      case Delta => DeltaWrite.setProperties(spark, path, Map(statsKey -> json))
-      case Iceberg =>
-        IcebergWrite.setProperties(spark, path, Map(statsKey -> json)); versionOf(spark, path)
-      case Parquet => throw new IllegalStateException("unreachable")
-    }
+    t.setProperties(spark, path, Map(statsKey -> json))
   }
 
-  /** The persisted [[analyzeTable]] stats of a table, if any. */
-  def tableStats(spark: SparkSession, path: String): Option[TableStats] = scala.util.Try {
-    val jsonOpt = detect(spark, path) match {
-      case Delta => DeltaRead.snapshotInfo(spark, path).configuration.get(statsKey)
-      case Iceberg => IcebergRead.tableProperties(spark, path).get(statsKey)
-      case Parquet => None
-    }
-    jsonOpt.map { j =>
+  /** The persisted [[analyzeTable]] stats of a table: None for plain
+    * parquet or a table never analyzed. A failed metadata read or a
+    * malformed `graft.stats` property raises. */
+  def tableStats(spark: SparkSession, path: String): Option[TableStats] =
+    tableOption(spark, path).flatMap(_.properties(spark, path).get(statsKey)).map { j =>
       val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(j)
+      require(n.isObject && n.path("rows").isIntegralNumber &&
+        n.path("version").isIntegralNumber,
+        s"malformed $statsKey property at $path: $j")
       import scala.jdk.CollectionConverters._
       val cols = Option(n.get("cols")).toSeq
         .flatMap(_.properties().asScala.map(e => e.getKey -> e.getValue))
@@ -1192,7 +1369,6 @@ object Lake {
           }
         }.toMap)
     }
-  }.toOption.flatten
 
   /** Format-agnostic bucket-layout probe — the zero-exchange routes'
     * entry: Iceberg spec `bucket[n]` partitioning ([[IcebergRead
@@ -1212,11 +1388,8 @@ object Lake {
     * reader). */
   def bucketLayoutMoR(spark: SparkSession, path: String, key: String)
       : Option[(Int, Map[Int, Seq[(String, Long)]], LayoutDeletes)] =
-    (detect(spark, path) match {
-      case Iceberg => IcebergRead.bucketLayoutMoR(spark, path, key)
-      case Delta => DeltaRead.bucketLayoutMoR(spark, path, key)
-      case Parquet => None
-    }).filter { case (_, _, dels) => deletesWithinBudget(spark, dels) }
+    tableOption(spark, path).flatMap(_.bucketLayoutMoR(spark, path, key))
+      .filter { case (_, _, dels) => deletesWithinBudget(spark, dels) }
 
   /** Estimated driver-heap bytes per EXPANDED deleted position: the routed
     * scans collect every live (file, pos) pair to the driver (a Long in
@@ -1334,22 +1507,12 @@ object Lake {
   /** The schema the bucket-local (by-name) reader resolves against. */
   def tableSchema(spark: SparkSession, path: String)
       : org.apache.spark.sql.types.StructType =
-    detect(spark, path) match {
-      // metadata-only: building the full snapshot DataFrame for `.schema`
-      // re-read every manifest and re-listed every data file per routed
-      // statement (round-19 optimization — measured seconds per build on
-      // a 640-file composite layout)
-      case Iceberg => IcebergRead.snapshotSchema(path)
-      case Delta => DeltaRead.snapshotInfo(spark, path).schema
-      case Parquet => spark.read.parquet(path).schema
-    }
+    tableOption(spark, path).map(_.schema(spark, path))
+      .getOrElse(spark.read.parquet(path).schema)
 
+  /** The current version, -1 for plain parquet. */
   private[sources] def versionOf(spark: SparkSession, path: String): Long =
-    detect(spark, path) match {
-      case Delta => DeltaRead.snapshotInfo(spark, path).version
-      case Iceberg => IcebergRead.currentSnapshotId(spark, path)
-      case Parquet => -1L
-    }
+    tableOption(spark, path).map(_.version(spark, path)).getOrElse(-1L)
 
   /** What [[maintain]] did, for logging/metrics. */
   final case class Maintenance(
@@ -1374,34 +1537,26 @@ object Lake {
       zorderBy: Seq[String] = Nil,
       retain: Int = 7, minFileAgeMs: Long = 24L * 3600 * 1000,
       checkpointEveryCommits: Int = 10, analyze: Boolean = false): Maintenance = {
-    val result = detect(spark, path) match {
-      case Delta =>
-        val before = DeltaRead.snapshotInfo(spark, path).version
-        val v = DeltaWrite.compact(spark, path, smallFileBytes, targetFileBytes, zorderBy)
-        // checkpoint when the replay tail (commits past the last
-        // checkpoint) has grown beyond the cadence
-        val logDir = new org.apache.hadoop.fs.Path(s"${path.stripSuffix("/")}/_delta_log")
-        val lfs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val names: Array[String] =
-          if (!lfs.exists(logDir)) Array.empty
-          else lfs.listStatus(logDir).map(_.getPath.getName)
-        val lastCp = names.filter(_.endsWith(".checkpoint.parquet"))
-          .map(_.take(20).toLong).sorted.lastOption.getOrElse(-1L)
-        val tail = names.count(n => n.length == 25 && n.endsWith(".json") &&
-          n.take(20).forall(_.isDigit) && n.take(20).toLong > lastCp)
-        val doCp = tail >= checkpointEveryCommits
-        if (doCp) DeltaWrite.checkpoint(spark, path)
-        val reclaimed = DeltaWrite.vacuum(spark, path, retain, minFileAgeMs)
-        Maintenance("delta", v != before, v, doCp, reclaimed.size)
-      case Iceberg =>
-        val before = IcebergRead.currentSnapshotId(spark, path)
-        val v = IcebergWrite.compact(spark, path, smallFileBytes, targetFileBytes, zorderBy)
-        val reclaimed = IcebergWrite.expireSnapshots(spark, path, retain, minFileAgeMs)
-        Maintenance("iceberg", v != before, v, checkpointed = false, reclaimed.size)
-      case Parquet => throw new IllegalArgumentException(
-        s"plain parquet at $path has no transaction log to maintain — " +
-          "use Layout.compact for a copy-based re-layout")
+    val t = table(spark, path)
+    val before = t.version(spark, path)
+    val v = t.compact(spark, path, smallFileBytes, targetFileBytes, zorderBy, None, "z")
+    // Delta only: checkpoint when the replay tail (commits past the last
+    // checkpoint) has grown beyond the cadence
+    val doCp = t == Delta && {
+      val logDir = new org.apache.hadoop.fs.Path(s"${path.stripSuffix("/")}/_delta_log")
+      val lfs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val names: Array[String] =
+        if (!lfs.exists(logDir)) Array.empty
+        else lfs.listStatus(logDir).map(_.getPath.getName)
+      val lastCp = names.filter(_.endsWith(".checkpoint.parquet"))
+        .map(_.take(20).toLong).sorted.lastOption.getOrElse(-1L)
+      val tail = names.count(n => n.length == 25 && n.endsWith(".json") &&
+        n.take(20).forall(_.isDigit) && n.take(20).toLong > lastCp)
+      tail >= checkpointEveryCommits
     }
+    if (doCp) DeltaWrite.checkpoint(spark, path)
+    val reclaimed = t.vacuum(spark, path, retain, minFileAgeMs, dryRun = false)
+    val result = Maintenance(t.name, v != before, v, doCp, reclaimed.size)
     // ANALYZE FRESHNESS: every commit above (and every append since the
     // last ANALYZE) silently withdraws the planner inputs keyed to the
     // stats' version — broadcast hints, join reordering, the agg budget
@@ -1422,12 +1577,7 @@ object Lake {
     * append snapshots. Plain parquet has no transaction log — refused. */
   def upsert(spark: SparkSession, df: DataFrame, path: String,
       keyCols: Seq[String]): Long =
-    detect(spark, path) match {
-      case Delta => DeltaWrite.upsert(spark, df, path, keyCols)
-      case Iceberg => IcebergWrite.upsert(spark, df, path, keyCols)
-      case Parquet => throw new IllegalArgumentException(
-        s"plain parquet at $path cannot carry an upsert")
-    }
+    table(spark, path).upsert(spark, df, path, keyCols)
 
   /** SQL-UPDATE dispatch: rows matching `condition` get `assignments`
     * applied — Delta as ONE DV-delete+append commit, Iceberg as a
@@ -1437,12 +1587,7 @@ object Lake {
       assignments: Seq[(String, org.apache.spark.sql.Column)],
       condition: org.apache.spark.sql.Column,
       alias: Option[String] = None): Long =
-    detect(spark, path) match {
-      case Delta => DeltaWrite.updateWhere(spark, path, assignments, condition, alias)
-      case Iceberg => IcebergWrite.updateWhere(spark, path, assignments, condition, alias)
-      case Parquet => throw new IllegalArgumentException(
-        s"plain parquet at $path cannot carry an update")
-    }
+    table(spark, path).updateWhere(spark, path, assignments, condition, alias)
 
   /** PARTITION-SCOPED OVERWRITE dispatch (`replaceWhere`): atomically swap
     * the partitions matching `where` for `df`'s rows — the daily-backfill
@@ -1451,12 +1596,7 @@ object Lake {
     * Plain parquet has no log for an atomic swap — refused. */
   def replaceWhere(spark: SparkSession, df: DataFrame, path: String,
       where: String): Long =
-    detect(spark, path) match {
-      case Delta => DeltaWrite.replaceWhere(spark, df, path, where)
-      case Iceberg => IcebergWrite.replaceWhere(spark, df, path, where)
-      case Parquet => throw new IllegalArgumentException(
-        s"plain parquet at $path cannot carry an atomic partition overwrite")
-    }
+    table(spark, path).replaceWhere(spark, df, path, where)
 
   // ---------------------------------------------------------------- SQL DML
 

@@ -185,14 +185,6 @@ private[sources] object LakeSql {
       """(?is)ALTER\s+TABLE\s+'([^']+)'\s+SET\s+PARTITION\s+SPEC\s*(\(.*)""".r
     val AlterSetBloom =
       """(?is)ALTER\s+TABLE\s+'([^']+)'\s+SET\s+BLOOM\s+FILTER\s*\(([\w\s,]*)\)\s*""".r
-    // post-statement version for the metadata-only ALTERs whose dispatch
-    // returns Unit (Delta: new log version; Iceberg schema evolution bumps
-    // metadata without a snapshot — report the unchanged head)
-    def versionOf(path: String): Long = detect(spark, path) match {
-      case Delta => DeltaRead.snapshotInfo(spark, path).version
-      case Iceberg => IcebergRead.currentSnapshotId(spark, path)
-      case Parquet => -1L
-    }
     // standard INSERT/MERGE semantics: source columns match the table's
     // by NAME (any order) and implicitly CAST to the declared types —
     // `VALUES (1, 1.5)` inserts into (BIGINT, DOUBLE) without explicit
@@ -227,10 +219,12 @@ private[sources] object LakeSql {
     s match {
       case AlterRename(path, oldName, newName) =>
         renameColumn(spark, path, oldName, newName)
-        versionOf(path)
+        // metadata-only ALTERs report the post-statement head (Iceberg
+        // schema evolution bumps metadata without a snapshot)
+        versionOf(spark, path)
       case AlterDropCol(path, name) =>
         dropColumn(spark, path, name)
-        versionOf(path)
+        versionOf(spark, path)
       case AlterAddCol(path, name, typeDdl) =>
         addColumn(spark, path, name, typeDdl.trim)
       case AlterAddConstraint(path, name, fromParen) =>
@@ -238,18 +232,12 @@ private[sources] object LakeSql {
         require(close > 0, s"unbalanced CHECK (...) parens in: $s")
         require(fromParen.substring(close + 1).trim.isEmpty,
           s"unexpected trailing text after CHECK (...) in: $s")
-        detect(spark, path) match {
-          case Delta => DeltaWrite.addCheckConstraint(spark, path, name,
-            fromParen.substring(1, close))
-          case other => throw new IllegalArgumentException(
-            s"ADD CONSTRAINT is a Delta protocol feature (delta.constraints.*), got $other at $path")
-        }
+        requireFormat(spark, path, Delta,
+          "ADD CONSTRAINT (a Delta protocol feature, delta.constraints.*)")
+        DeltaWrite.addCheckConstraint(spark, path, name, fromParen.substring(1, close))
       case AlterDropConstraint(path, name) =>
-        detect(spark, path) match {
-          case Delta => DeltaWrite.dropCheckConstraint(spark, path, name)
-          case other => throw new IllegalArgumentException(
-            s"DROP CONSTRAINT is a Delta protocol feature, got $other at $path")
-        }
+        requireFormat(spark, path, Delta, "DROP CONSTRAINT (a Delta protocol feature)")
+        DeltaWrite.dropCheckConstraint(spark, path, name)
       case AlterSetBloom(path, colList) =>
         // opt FUTURE writes into per-file bloom sketches on the named
         // columns (Delta: the extended `graftBloom` stats key inside each
@@ -261,17 +249,8 @@ private[sources] object LakeSql {
         val schema = read(spark, path).schema
         cols.foreach(c => require(schema.fieldNames.contains(c),
           s"SET BLOOM FILTER: no column '$c' in ${schema.fieldNames.mkString(",")}"))
-        detect(spark, path) match {
-          case Delta => DeltaWrite.setProperties(spark, path,
-            Map("graft.bloom.columns" -> cols.mkString(",")))
-          case Iceberg =>
-            IcebergWrite.setProperties(spark, path,
-              Map("graft.bloom.columns" -> cols.mkString(",")))
-            versionOf(path)
-          case Parquet => throw new IllegalArgumentException(
-            "SET BLOOM FILTER persists sketches in the table's own " +
-              s"metadata — plain parquet has none at $path")
-        }
+        table(spark, path).setProperties(spark, path,
+          Map("graft.bloom.columns" -> cols.mkString(",")))
       case AlterSetSpec(path, fromParen) =>
         val close = matchingParen(fromParen, 0)
         require(close > 0, s"unbalanced SET PARTITION SPEC parens in: $s")
@@ -279,16 +258,14 @@ private[sources] object LakeSql {
           s"unexpected trailing text after SET PARTITION SPEC (...) in: $s")
         evolvePartitionSpec(spark, path,
           splitTopLevel(fromParen.substring(1, close)))
-        versionOf(path)
+        versionOf(spark, path)
       case MvCreate(mvPath, basePath, keysCsv, measuresCsv) =>
         def cols(cs: String) =
           cs.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        val d = detect(spark, basePath) match {
-          case Delta => graft.plans.Mv.createDelta(spark, basePath, mvPath,
-            cols(keysCsv), cols(measuresCsv))
-          case Parquet => graft.plans.Mv.create(spark, basePath, mvPath,
-            cols(keysCsv), cols(measuresCsv))
-          case Iceberg => graft.plans.Mv.createIceberg(spark, basePath, mvPath,
+        val d = tableOption(spark, basePath) match {
+          case Some(t) => graft.plans.Mv.createVersioned(spark, basePath, mvPath,
+            cols(keysCsv), cols(measuresCsv), t.name)
+          case None => graft.plans.Mv.create(spark, basePath, mvPath,
             cols(keysCsv), cols(measuresCsv))
         }
         d.baseVersion
@@ -321,13 +298,7 @@ private[sources] object LakeSql {
           .getOrElse(-1L)
         Lake.clone(spark, source, target, v)
       case Export(source, fmt, target) =>
-        val as = fmt.toLowerCase match {
-          case "delta" => Delta
-          case "iceberg" => Iceberg
-          case other => throw new IllegalArgumentException(
-            s"EXPORT ... TO $other: supported formats are delta | iceberg")
-        }
-        export(spark, source, target, as)
+        export(spark, source, target, Lake.format(fmt))
       case DropTable(ifExistsOrNull, path) =>
         val tp = new org.apache.hadoop.fs.Path(path)
         val tfs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -339,7 +310,7 @@ private[sources] object LakeSql {
           // a typo'd (or hostile) path must never remove arbitrary data.
           // Same classification as SHOW TABLES: a lake log/metadata, flat
           // .parquet files, or hive key=value partition dirs holding them.
-          val looksLikeTable = detect(spark, path) != Parquet || {
+          val looksLikeTable = tableOption(spark, path).isDefined || {
             val children = tfs.listStatus(tp)
             children.exists(f =>
               f.isFile && f.getPath.getName.endsWith(".parquet")) ||
@@ -397,18 +368,13 @@ private[sources] object LakeSql {
         val tfs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val occupied = tfs.exists(tp) && tfs.listStatus(tp).nonEmpty
         if (occupied && ifNotExistsOrNull != null)
-          return versionOf(path) // standard IF NOT EXISTS no-op
+          return versionOf(spark, path) // standard IF NOT EXISTS no-op
         require(!occupied,
           s"CREATE TABLE: $path already exists and is not empty")
         val empty = spark.createDataFrame(
           spark.sparkContext.parallelize(
             Seq.empty[org.apache.spark.sql.Row], 1), schema)
-        format match {
-          case "delta" => DeltaWrite.append(spark, empty, path, partitionBy = parts)
-          case "iceberg" => IcebergWrite.append(spark, empty, path, partitionBy = parts)
-          case other => throw new IllegalArgumentException(
-            s"CREATE TABLE USING $other: supported formats are delta | iceberg")
-        }
+        Lake.format(format).append(spark, empty, path, partitionBy = parts)
       case CtasHead(path, format, body) =>
         val (parts, selectTail) = body.trim match {
           case PartitionedHead(fromParen) =>
@@ -424,12 +390,7 @@ private[sources] object LakeSql {
             s"CREATE TABLE: expected AS <select>, got: $other")
         }
         val df = sourceFrame(spark, source)
-        format.toLowerCase match {
-          case "delta" => DeltaWrite.append(spark, df, path, partitionBy = parts)
-          case "iceberg" => IcebergWrite.append(spark, df, path, partitionBy = parts)
-          case other => throw new IllegalArgumentException(
-            s"CREATE TABLE USING $other: supported formats are delta | iceberg")
-        }
+        Lake.format(format).append(spark, df, path, partitionBy = parts)
       case Optimize(path, body) =>
         val b = body.trim
         val zIdx = topLevelKeyword(b, "ZORDER")
@@ -528,16 +489,11 @@ private[sources] object LakeSql {
         // remove every row in ONE commit, keep schema/partitioning/history
         // (time travel still reads the pre-truncate data) — an overwrite
         // with the empty frame of the table's own schema
-        val fmt = detect(spark, path)
-        require(fmt != Parquet,
-          s"TRUNCATE needs a lake table (plain parquet has no transaction log), got $path")
+        val t = table(spark, path)
         val empty = spark.createDataFrame(
           spark.sparkContext.parallelize(Seq.empty[org.apache.spark.sql.Row], 1),
           read(spark, path).schema)
-        fmt match {
-          case Delta => DeltaWrite.overwrite(spark, empty, path)
-          case _ => IcebergWrite.overwrite(spark, empty, path)
-        }
+        t.overwrite(spark, empty, path)
       case Delete(path, aliasOrNull, pred) =>
         deleteWhere(spark, path, resolveExpr(spark, pred), Option(aliasOrNull))
       case MergeHead(evoOrNull, path, fromParen) =>
@@ -668,12 +624,8 @@ private[sources] object LakeSql {
             replaceWhere(spark, conformTo(path, sourceFrame(spark, predAndSource.substring(srcIdx))), path,
               predAndSource.substring(0, srcIdx).trim)
           case source =>
-            detect(spark, path) match {
-              case Delta => DeltaWrite.overwrite(spark, conformTo(path, sourceFrame(spark, source)), path)
-              case Iceberg => IcebergWrite.overwrite(spark, conformTo(path, sourceFrame(spark, source)), path)
-              case other => throw new IllegalArgumentException(
-                s"INSERT OVERWRITE (whole-table) needs a lake table, got $other at $path")
-            }
+            table(spark, path).overwrite(spark,
+              conformTo(path, sourceFrame(spark, source)), path)
         }
       case Insert(path, body0) =>
         // optional COLUMN LIST: `INSERT INTO '<p>' (c1, c2) <source>` maps
@@ -698,14 +650,8 @@ private[sources] object LakeSql {
         val conformed = conformTo(path, src)
         // appends INHERIT the table's partitioning (the writers refuse a
         // partitionBy mismatch; a SQL user never restates the layout)
-        detect(spark, path) match {
-          case Delta => DeltaWrite.append(spark, conformed, path,
-            partitionBy = DeltaRead.snapshotInfo(spark, path).partitionColumns)
-          case Iceberg => IcebergWrite.append(spark, conformed, path,
-            partitionBy = IcebergWrite.currentPartitionBy(spark, path))
-          case other => throw new IllegalArgumentException(
-            s"INSERT INTO needs a lake table, got $other at $path")
-        }
+        val t = table(spark, path)
+        t.append(spark, conformed, path, partitionBy = t.partitionBy(spark, path))
       case UpdateHead(path, aliasOrNull, body) =>
         val whereIdx = topLevelKeyword(body, "WHERE")
         val (setClause, predOpt) =
@@ -810,18 +756,12 @@ private[sources] object LakeSql {
         // the re-runnable DDL of the table as it stands — column schema,
         // format, partitioning — exactly the CreateSchema dialect, so the
         // emitted statement recreates the shape via Lake.sql verbatim
-        val fmt = detect(spark, path)
-        require(fmt != Parquet,
-          s"SHOW CREATE TABLE needs a lake table, got plain parquet at $path")
+        val t = table(spark, path)
         val schema = read(spark, path).schema
-        val parts = fmt match {
-          case Delta => DeltaRead.snapshotInfo(spark, path).partitionColumns
-          case _ => IcebergWrite.currentPartitionBy(spark, path)
-        }
+        val parts = t.partitionBy(spark, path)
         val cols = schema.fields.map(f => s"${f.name} ${f.dataType.sql}")
           .mkString(", ")
-        val stmt = s"CREATE TABLE '$path' ($cols) USING " +
-          fmt.toString.toLowerCase(java.util.Locale.ROOT) +
+        val stmt = s"CREATE TABLE '$path' ($cols) USING ${t.name}" +
           (if (parts.isEmpty) "" else s" PARTITIONED BY (${parts.mkString(", ")})")
         Seq(stmt).toDF("create_statement")
       case DescribeDetail(path) =>
@@ -829,24 +769,10 @@ private[sources] object LakeSql {
         // laid out" check) — log/manifest-only on lake formats, a
         // FileSystem listing on plain parquet; an Iceberg table with live
         // MoR deletes reports -1 counts (metadata would overstate)
-        val fmt = detect(spark, path)
+        val fmt = tableOption(spark, path)
         val (version, numFiles, bytes, partCols) = fmt match {
-          case Delta =>
-            val sn = DeltaRead.snapshotInfo(spark, path)
-            (sn.version, sn.files.length.toLong, sn.files.map(_.size).sum,
-              sn.partitionColumns)
-          case Iceberg =>
-            val v = IcebergRead.currentSnapshotId(spark, path)
-            val (nf, b) = scala.util.Try {
-              val r = IcebergRead.partitionSummary(spark, path)
-                .agg(org.apache.spark.sql.functions.sum(
-                  org.apache.spark.sql.functions.col("n_files")),
-                  org.apache.spark.sql.functions.sum(
-                    org.apache.spark.sql.functions.col("bytes"))).head()
-              (r.getLong(0), r.getLong(1))
-            }.getOrElse((-1L, -1L))
-            (v, nf, b, IcebergWrite.currentPartitionBy(spark, path))
-          case Parquet =>
+          case Some(t) => t.detail(spark, path)
+          case None =>
             val hp = new org.apache.hadoop.fs.Path(path)
             val hfs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
             val it = hfs.listFiles(hp, true)
@@ -858,7 +784,7 @@ private[sources] object LakeSql {
             (-1L, n, b, Seq.empty[String])
         }
         val nCols = read(spark, path).schema.size
-        Seq((fmt.toString.toLowerCase(java.util.Locale.ROOT), path, version,
+        Seq((fmt.map(_.name).getOrElse("parquet"), path, version,
           numFiles, bytes, partCols.mkString(","), nCols))
           .toDF("format", "location", "version", "num_files", "size_bytes",
             "partition_columns", "num_columns")
@@ -902,12 +828,9 @@ private[sources] object LakeSql {
           // returns qualified file:/ URIs the local-path readers reject)
           val name = st.getPath.getName
           val child = s"${root.stripSuffix("/")}/$name"
-          detect(spark, child) match {
-            case Delta => Some((name, "delta",
-              DeltaRead.snapshotInfo(spark, child).version))
-            case Iceberg => Some((name, "iceberg",
-              IcebergRead.currentSnapshotId(spark, child)))
-            case Parquet =>
+          tableOption(spark, child) match {
+            case Some(t) => Some((name, t.name, t.version(spark, child)))
+            case None =>
               // a parquet TABLE is either flat (.parquet files directly
               // under it) or hive-partitioned (key=value subdirectories
               // holding .parquet files — one level is enough to classify)

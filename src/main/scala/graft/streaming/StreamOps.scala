@@ -590,20 +590,12 @@ object StreamOps {
     val base = java.nio.file.Files.createTempDirectory(s"graft_${kind}_tail").toString
     val table = s"$base/tbl"
     val ckpt = s"$base/ckpt"
-    def append(part: Int): Unit = {
-      val df = ev.where(pmod(col("event_id"), lit(3)) === part)
-      kind match {
-        case "delta" => graft.sources.DeltaWrite.append(spark, df, table)
-        case "iceberg" => graft.sources.IcebergWrite.append(spark, df, table)
-      }
-    }
+    val format = graft.sources.Lake.format(kind)
+    def append(part: Int): Unit =
+      format.append(spark, ev.where(pmod(col("event_id"), lit(3)) === part), table)
     def drain(run: Int): String = {
       val name = s"graft_${kind}_tail_r$run"
-      val src = kind match {
-        case "delta" => LakeSources.delta(spark, table)
-        case "iceberg" => LakeSources.iceberg(spark, table)
-      }
-      val q = src.groupBy(col("event_type"))
+      val q = format.stream(spark, table).groupBy(col("event_type"))
         .agg(count(lit(1)).as("cnt"), round(sum(col("value")), 2).as("sum_value"))
         .writeStream.outputMode(OutputMode.Complete()).format("memory")
         .queryName(name)
@@ -630,33 +622,21 @@ object StreamOps {
     * snapshot tagged 'insert'); offsets live in the engine's checkpoint.
     * Replay safety is semantic: applyChanges deletes the batch's keys
     * then re-inserts, so re-applying the same changelog batch is
-    * idempotent — no high-water marks needed. */
+    * idempotent — no high-water marks needed. `targetFormat` is parsed
+    * ([[graft.sources.Lake.format]]) before the query starts: an unknown
+    * name fails with no checkpoint written. */
   def changelogApplyStream(spark: SparkSession, source: String, target: String,
       targetFormat: String, keyCols: Seq[String], checkpointDir: String): Unit = {
-    import graft.sources.{DeltaWrite, IcebergWrite, Lake}
-    val src = Lake.detect(spark, source) match {
-      case Lake.Delta => LakeSources.deltaChangelog(spark, source)
-      case Lake.Iceberg => LakeSources.icebergChangelog(spark, source)
-      case other => throw new IllegalArgumentException(
-        s"changelog stream needs a lake-format source, got $other at $source")
-    }
+    import graft.sources.Lake
+    val src = Lake.table(spark, source).changelogStream(spark, source)
+    val tgt = Lake.format(targetFormat)
     val q = src.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val marker = targetFormat match {
-          case "delta" => "_delta_log"
-          case "iceberg" => "metadata"
-          case other => throw new IllegalArgumentException(
-            s"unsupported target format '$other' (delta | iceberg)")
-        }
-        val exists = fsExists(spark, s"${target.stripSuffix("/")}/$marker")
-        if (exists) Lake.applyChanges(spark, batch, target, keyCols)
+        if (tgt.exists(spark, target)) Lake.applyChanges(spark, batch, target, keyCols)
         else {
           // seed: deletes against a not-yet-existing table are no-ops
           val inserts = batch.where(col("_change_type") === "insert").drop("_change_type")
-          if (!inserts.isEmpty) targetFormat match {
-            case "delta" => DeltaWrite.append(spark, inserts, target)
-            case "iceberg" => IcebergWrite.append(spark, inserts, target)
-          }
+          if (!inserts.isEmpty) tgt.append(spark, inserts, target)
         }
         ()
       }
@@ -683,44 +663,21 @@ object StreamOps {
     * Additive updates (`SET v = v + src_v`) are NOT replay-safe here —
     * maintain additive state with the LEDGERED [[aggregateMvStream]]
     * instead. */
-  /** Scheme-agnostic existence probe — streaming sinks may target
-    * `hdfs://`/`s3a://` paths, where a `java.io.File` probe silently
-    * evaluates false and would re-seed an existing table. */
-  private def fsExists(spark: SparkSession, p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
   def mergeStream(spark: SparkSession, source: String, target: String,
       targetFormat: String, keys: Seq[String],
       matched: Seq[(Option[org.apache.spark.sql.Column], graft.sources.Lake.MergeAction)],
       notMatched: Option[Option[org.apache.spark.sql.Column]],
       checkpointDir: String,
       evolveSchema: Boolean = false): Unit = {
-    import graft.sources.{DeltaWrite, IcebergWrite, Lake}
-    val src = Lake.detect(spark, source) match {
-      case Lake.Delta => LakeSources.delta(spark, source)
-      case Lake.Iceberg => LakeSources.iceberg(spark, source)
-      case other => throw new IllegalArgumentException(
-        s"merge stream needs a lake-format source, got $other at $source")
-    }
-    val marker = targetFormat match {
-      case "delta" => "_delta_log"
-      case "iceberg" => "metadata"
-      case other => throw new IllegalArgumentException(
-        s"unsupported target format '$other' (delta | iceberg)")
-    }
+    import graft.sources.Lake
+    val src = Lake.table(spark, source).stream(spark, source)
+    val tgt = Lake.format(targetFormat)
     val q = src.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
-          if (!fsExists(spark, s"${target.stripSuffix("/")}/$marker")) {
-            // seed the target EMPTY with the stream's schema: the merge
-            // below then applies its own not-matched semantics to batch 0
-            targetFormat match {
-              case "delta" => DeltaWrite.append(spark, batch.limit(0), target)
-              case "iceberg" => IcebergWrite.append(spark, batch.limit(0), target)
-            }
-          }
+          // seed the target EMPTY with the stream's schema: the merge
+          // below then applies its own not-matched semantics to batch 0
+          if (!tgt.exists(spark, target)) tgt.append(spark, batch.limit(0), target)
           Lake.mergeInto(spark, target, batch, keys, matched, notMatched,
             evolveSchema = evolveSchema)
         }
@@ -766,43 +723,18 @@ object StreamOps {
   def aggregateMvStream(spark: SparkSession, source: String, target: String,
       keyCols: Seq[String], measures: Seq[(String, Column)], appId: String,
       checkpointDir: String, targetFormat: String = "delta"): Unit = {
-    import graft.sources.{DeltaRead, DeltaWrite, IcebergRead, IcebergWrite, Lake}
+    import graft.sources.Lake
     require(measures.nonEmpty, "aggregateMvStream needs at least one measure")
-    val src = Lake.detect(spark, source) match {
-      case Lake.Delta => LakeSources.deltaChangelog(spark, source)
-      case Lake.Iceberg => LakeSources.icebergChangelog(spark, source)
-      case other => throw new IllegalArgumentException(
-        s"aggregate MV needs a lake-format source, got $other at $source")
-    }
-    // per-format dispatch: existence marker, snapshot read, seed append,
-    // merge commit, and where the (appId, batchId) exactly-once mark lives
-    // (Delta: txn action; Iceberg: graft.* snapshot-summary ledger).
-    val isDelta = targetFormat match {
-      case "delta" => true
-      case "iceberg" => false
-      case other => throw new IllegalArgumentException(
-        s"unsupported target format '$other' (delta | iceberg)")
-    }
-    val marker = if (isDelta) "_delta_log" else "metadata"
-    def exists(): Boolean =
-      fsExists(spark, s"${target.stripSuffix("/")}/$marker")
-    def readMv(): DataFrame =
-      if (isDelta) DeltaRead.snapshot(spark, target) else IcebergRead.snapshot(spark, target)
-    def seed(live: DataFrame, batchId: Long): Unit =
-      if (isDelta) DeltaWrite.append(spark, live, target, txn = Some((appId, batchId)))
-      else IcebergWrite.append(spark, live, target,
-        summaryProps = Map("graft.app-id" -> appId, "graft.batch-id" -> batchId.toString))
-    def merge(changes: DataFrame, batchId: Long): Unit =
-      if (isDelta) DeltaWrite.applyChanges(spark, changes, target, keyCols,
-        txn = Some((appId, batchId)))
-      else IcebergWrite.applyChanges(spark, changes, target, keyCols,
-        summaryProps = Map("graft.app-id" -> appId, "graft.batch-id" -> batchId.toString))
+    val src = Lake.table(spark, source).changelogStream(spark, source)
+    // every seed and merge commit carries the (appId, batchId) exactly-once
+    // mark the target format records (Delta: txn action; Iceberg: graft.*
+    // snapshot-summary ledger)
+    val tgt = Lake.format(targetFormat)
     // read ONCE at start; within a run batches are sequential, so a driver
     // var tracks the high-water mark without rescanning the log per batch
     var highWater: Long =
-      if (!exists()) -1L
-      else if (isDelta) DeltaRead.txnVersions(spark, target).getOrElse(appId, -1L)
-      else IcebergRead.txnVersions(spark, target).getOrElse(appId, -1L)
+      if (!tgt.exists(spark, target)) -1L
+      else tgt.marks(spark, target).getOrElse(appId, -1L)
     // Batch ids are only meaningful within ONE checkpoint lineage (the
     // standard foreachBatch txn caveat): a FRESH checkpointDir renumbers
     // batches from 0, so marks left by a previous checkpoint would make the
@@ -828,11 +760,11 @@ object StreamOps {
           val sign = when(col("_change_type") === "insert", lit(1L)).otherwise(lit(-1L))
           val aggs = allMeasures.map { case (n, e) => sum(sign * e.cast("long")).as(n) }
           val delta = batch.groupBy(keyCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
-          val tableLive = exists()
+          val tableLive = tgt.exists(spark, target)
           val merged =
             if (!tableLive) delta
             else {
-              val cur = readMv().as("c")
+              val cur = tgt.read(spark, target, -1L).as("c")
               val d = delta.as("d")
               // null-safe key equality: NULL keys are legal group keys
               val cond = keyCols.map(c => d(c) <=> cur(c)).reduce(_ && _)
@@ -843,13 +775,13 @@ object StreamOps {
             }
           if (!tableLive) {
             val live = merged.where(col("mv_cnt") > 0)
-            if (!live.isEmpty) seed(live, batchId)
+            if (!live.isEmpty) tgt.append(spark, live, target, mark = Some((appId, batchId)))
           } else {
             // delete-then-insert by key: touched keys drop their old row;
             // only keys still live re-insert. One commit, one txn mark.
             val changes = merged.withColumn("_change_type",
               when(col("mv_cnt") > 0, lit("insert")).otherwise(lit("delete")))
-            merge(changes, batchId)
+            tgt.applyChanges(spark, changes, target, keyCols, mark = Some((appId, batchId)))
           }
           highWater = batchId
         }

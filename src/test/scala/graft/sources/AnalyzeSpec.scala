@@ -245,4 +245,20 @@ class AnalyzeSpec extends SparkSpec {
       assert(Lake.tableStats(spark, t).exists(_.version == v), s"$fmt: no-op when fresh")
     }
   }
+
+  test("tableStats: None only for parquet or an un-analyzed table; a malformed property raises") {
+    val pq = tmp("graft_stats_pq") + "/tbl"
+    Seq((1L, "a")).toDF("id", "s").write.parquet(pq)
+    assert(Lake.tableStats(spark, pq) === None)
+    for (fmt <- Seq("delta", "iceberg")) {
+      val t = tmp(s"graft_stats_bad_$fmt") + "/tbl"
+      Lake.format(fmt).append(spark, Seq((1L, "a")).toDF("id", "s"), t)
+      assert(Lake.tableStats(spark, t) === None, fmt)
+      Lake.table(spark, t).setProperties(spark, t, Map("graft.stats" -> """{"cols":{}}"""))
+      val e = intercept[IllegalArgumentException](Lake.tableStats(spark, t))
+      assert(e.getMessage.contains("graft.stats") && e.getMessage.contains(t), e.getMessage)
+      Lake.table(spark, t).setProperties(spark, t, Map("graft.stats" -> "not json"))
+      intercept[com.fasterxml.jackson.core.JsonProcessingException](Lake.tableStats(spark, t))
+    }
+  }
 }

@@ -341,4 +341,50 @@ class IcebergStatsSpec extends SparkSpec {
         Seq(idField.toString))
     }
   }
+
+  test("manifest lists carry each manifest's row as the snapshot that added it wrote") {
+    import scala.jdk.CollectionConverters._
+    val table = tmp("ice_manifest_list")
+    IcebergWrite.append(spark,
+      (1L to 40L).map(i => (i, s"n$i")).toDF("id", "name").repartition(3), table)
+    IcebergWrite.deleteWhere(spark, table, col("id") % 5 === 0)
+    IcebergWrite.updateWhere(spark, table, Seq("name" -> lit("u")), col("id") % 7 === 0)
+    IcebergWrite.upsert(spark, Seq((2L, "up"), (41L, "new")).toDF("id", "name"), table, Seq("id"))
+    IcebergWrite.deleteWhereEquals(spark, table, Seq(3L, 4L).map(Tuple1(_)).toDF("id"))
+
+    val meta = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(IcebergRead.metadataFile(table))
+    val lists = meta.path("snapshots").elements().asScala.toSeq
+      .map(sn => sn.path("snapshot-id").asLong() -> sn.path("manifest-list").asText())
+      .sortBy(_._1)
+    assert(lists.size >= 5, lists)
+    val fields = Seq("sequence_number", "added_snapshot_id", "added_files_count",
+      "added_rows_count", "manifest_length", "content", "partition_spec_id")
+    def rows(ml: String): Map[String, Seq[String]] =
+      IcebergRead.avroRecords(ml).map(r =>
+        r.get("manifest_path").toString -> fields.map(f => r.get(f).toString)).toMap
+    val firstSeen = scala.collection.mutable.Map.empty[String, (Long, Seq[String])]
+    lists.foreach { case (id, ml) =>
+      rows(ml).foreach { case (path, row) =>
+        firstSeen.get(path) match {
+          case Some((addedBy, orig)) =>
+            assert(row === orig, s"snapshot $id restamped $path added by $addedBy")
+          case None =>
+            // a manifest first listed by snapshot `id` was added by it
+            assert(row.take(2) === Seq(id.toString, id.toString), s"$path in snapshot $id")
+            firstSeen(path) = (id, row)
+        }
+      }
+    }
+    // the append's manifest still counts the append's 40 rows at the head
+    val (appendId, appendRow) = firstSeen.values.minBy(_._1)
+    assert(appendId === lists.head._1)
+    assert(appendRow(3) === "40")
+    assert(rows(lists.last._2).values.exists(_ == appendRow))
+    // history counts only the manifests each snapshot added
+    val added = Lake.history(spark, table).select("version", "added_files")
+      .as[(Long, Long)].collect().toMap
+    assert(added(appendId) === appendRow(2).toLong)
+    assert(added(appendId) === IcebergRead.fileStats(spark, table, appendId).count())
+  }
 }

@@ -173,6 +173,19 @@ class LakeSourceSpec extends SparkSpec {
       Lake.read(spark, src).orderBy("id").collect().toSeq)
   }
 
+  test("changelog stream refuses an unknown target format before the query starts") {
+    val base = tmp("lakesrc_cdc_fmt")
+    val src = s"$base/src"
+    val ckpt = s"$base/ckpt"
+    DeltaWrite.append(spark, Seq((1L, 10L)).toDF("id", "v"), src)
+    val e = intercept[IllegalArgumentException] {
+      StreamOps.changelogApplyStream(spark, src, s"$base/dst", "hudi", Seq("id"), ckpt)
+    }
+    assert(e.getMessage.contains("hudi"), e.getMessage)
+    assert(!new java.io.File(ckpt).exists(), "the stream started and wrote its checkpoint")
+    assert(!new java.io.File(s"$base/dst").exists())
+  }
+
   test("aggregate MV: additive maintenance through appends, deletes, upserts") {
     import graft.sources.{DeltaRead, DeltaWrite}
     val base = tmp("lakesrc_aggmv")
