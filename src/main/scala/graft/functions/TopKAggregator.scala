@@ -16,10 +16,10 @@ case class ScoredId(id: Long, score: Double)
   * `row_number() OVER (ORDER BY score DESC, id)` ≤ k, so exact-search
   * results are unchanged, only the plan shape improves.
   *
-  * NaN scores (a zero-norm embedding's cosine) rank WORST, tied with
-  * -Infinity and resolved by id — `>` alone is never true for NaN, which
-  * breaks sortWith's strict-weak-ordering contract (TimSort can throw on
-  * buffers over 32 elements) and made reduce/merge disagree.
+  * NaN scores rank WORST, tied with -Infinity and resolved by id — `>`
+  * alone is never true for NaN, which breaks sortWith's strict-weak-ordering
+  * contract (TimSort can throw on buffers over 32 elements) and made
+  * reduce/merge disagree.
   */
 class TopKAggregator(k: Int) extends Aggregator[ScoredId, Seq[ScoredId], Seq[ScoredId]] {
   private def rank(s: Double): Double = if (s.isNaN) Double.NegativeInfinity else s

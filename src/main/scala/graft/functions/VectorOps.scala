@@ -31,5 +31,11 @@ object VectorOps {
 
   def norm(a: Column): Column = sqrt(norm2(a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+  /** The one cosine of every vector path: a dot product over the product
+    * of its two vectors' precomputed norms `na` and `nb`, NULL for a zero
+    * divisor in both ANSI modes (a zero-norm vector has no direction), as
+    * DuckDB's oracle and Spark's non-ANSI division give it, -0.0 and NaN
+    * included. A NULL cosine ranks last under DESC and never passes a
+    * `>=` threshold. */
+  def cosine(dot: Column, na: Column, nb: Column): Column = try_divide(dot, na * nb)
 }

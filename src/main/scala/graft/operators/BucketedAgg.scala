@@ -200,14 +200,6 @@ object BucketedAgg {
     localDistinctRdd(spark, rdd, readSchema)
   }
 
-  /** Per-partition DISTINCT over an already co-partitioned frame — the
-    * [[localAgg]] twin for de-duplication; the caller owns the guarantee
-    * that equal rows share a partition. */
-  def localDistinct(spark: SparkSession, input: DataFrame): DataFrame = {
-    val schema = StructType(input.schema.fields.map(_.copy(metadata = Metadata.empty)))
-    localDistinctRdd(spark, input.queryExecution.toRdd, schema)
-  }
-
   private def localDistinctRdd(spark: SparkSession,
       input: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
       schema: StructType): DataFrame = {

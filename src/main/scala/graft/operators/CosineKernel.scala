@@ -75,23 +75,22 @@ private[operators] object VectorBlock {
 
 /** The exact cosine top-k scoring loop, shared by every exact path of
   * [[Similarity]]. For each group of query rows sharing an id it scores
-  * every corpus row with a different id and keeps the best k in Spark's
-  * sort order for `cosine DESC, id ASC`: nulls last, NaN greatest, -0.0
-  * equal to 0.0.
+  * every corpus row with a different id and keeps the best k in the order
+  * of [[Similarity.rankPerKey]], as Spark sorts `cosine DESC NULLS LAST,
+  * id ASC`: nulls last, NaN greatest, -0.0 equal to 0.0.
   *
-  * A cosine is `dot / (qn * cn)` exactly as the Catalyst expression
-  * `vec_dot(q, c) / (norm(q) * norm(c))` evaluates it: the dot product
-  * accumulates left to right in doubles; a length mismatch or an invalid
-  * vector gives null; a zero divisor gives null, or Spark's DIVIDE_BY_ZERO
-  * error when `ansi` is set. */
+  * A cosine is `dot / (qn * cn)` exactly as [[graft.functions.VectorOps.cosine]]
+  * evaluates it over `vec_dot` and `norm`: the dot product accumulates
+  * left to right in doubles; a length mismatch or an invalid vector gives
+  * null; a zero divisor gives null in both ANSI modes. */
 private[operators] object CosineKernel {
 
   /** Top-k neighbours in `c` of every group of rows of `q` (each group one
     * id, at most `maxGroup` rows), ranked 1..k per group, as rows
     * (vec_id, rank, nn_id, cosine). */
   def topK(q: VectorBlock, groups: Iterator[Array[Int]], maxGroup: Int, c: VectorBlock,
-      k: Int, ansi: Boolean): Iterator[InternalRow] = {
-    val top = new TopK(math.min(k.toLong, c.size.toLong * maxGroup).toInt, c, ansi)
+      k: Int): Iterator[InternalRow] = {
+    val top = new TopK(math.min(k.toLong, c.size.toLong * maxGroup).toInt, c)
     val row = new GenericInternalRow(4)
     groups.flatMap { g =>
       top.n = 0
@@ -109,7 +108,7 @@ private[operators] object CosineKernel {
 
   /** The best `m` rows of `c` for one query group at a time: slots 0
     * until n, best first. */
-  private final class TopK(m: Int, c: VectorBlock, ansi: Boolean) {
+  private final class TopK(m: Int, c: VectorBlock) {
     val best = new Array[Int](m)
     val sims = new Array[Double](m)
     val nulls = new Array[Boolean](m)
@@ -161,12 +160,11 @@ private[operators] object CosineKernel {
       }
     }
 
-    /** Row j's dot product with the query, divided as Spark's `Divide`. */
+    /** Row j's dot product with the query, divided as `VectorOps.cosine`. */
     private def offer(qid: Long, qn: Double, j: Int, dot: Double): Unit =
       if (c.ids(j) != qid) {
         val den = qn * c.norms(j)
         if (den != 0.0) insert(j, dot / den, nul = false)
-        else if (ansi) throw Bridge.divideByZeroError()
         else insert(j, 0.0, nul = true)
       }
 
@@ -199,31 +197,30 @@ private[operators] object CosineKernel {
   * holds the queries. With `selfSearch` (queries and corpus are the same
   * rows) the ranks are final; otherwise each task's are per query row and
   * per partition, and the caller merges them per query id. */
-private[graft] case class CosineTopK(k: Int, ansi: Boolean, queriesStreamed: Boolean,
+private[graft] case class CosineTopK(k: Int, queriesStreamed: Boolean,
     selfSearch: Boolean, output: Seq[Attribute], left: LogicalPlan, right: LogicalPlan)
     extends BinaryNode {
   // reads every column of both sides: column pruning keeps them
   override def references: AttributeSet = left.outputSet ++ right.outputSet
   override def producedAttributes: AttributeSet = AttributeSet(output)
   override def simpleString(maxFields: Int): String =
-    CosineTopK.describe(nodeName, k, ansi, queriesStreamed, selfSearch)
+    CosineTopK.describe(nodeName, k, queriesStreamed, selfSearch)
   override protected def withNewChildrenInternal(l: LogicalPlan, r: LogicalPlan): CosineTopK =
     copy(left = l, right = r)
 }
 
 private[graft] object CosineTopK {
-  def apply(k: Int, ansi: Boolean, queriesStreamed: Boolean, selfSearch: Boolean,
+  def apply(k: Int, queriesStreamed: Boolean, selfSearch: Boolean,
       streamed: LogicalPlan, broadcast: LogicalPlan): CosineTopK =
-    CosineTopK(k, ansi, queriesStreamed, selfSearch, Seq(
+    CosineTopK(k, queriesStreamed, selfSearch, Seq(
       AttributeReference("vec_id", LongType, nullable = false)(),
       AttributeReference("rank", IntegerType, nullable = false)(),
       AttributeReference("nn_id", LongType, nullable = false)(),
       AttributeReference("cosine", DoubleType)()), streamed, broadcast)
 
-  def describe(node: String, k: Int, ansi: Boolean, queriesStreamed: Boolean,
-      selfSearch: Boolean): String =
+  def describe(node: String, k: Int, queriesStreamed: Boolean, selfSearch: Boolean): String =
     s"$node k=$k, ${if (queriesStreamed) "queries" else "corpus"} streamed" +
-      (if (selfSearch) ", self-search" else "") + (if (ansi) ", ansi" else "")
+      (if (selfSearch) ", self-search" else "")
 }
 
 /** Physical [[CosineTopK]]: the broadcast side is delivered by Spark's own
@@ -235,38 +232,37 @@ private[graft] object CosineTopK {
   * partition 0 ranks those ids once each, over the candidates of all of
   * their rows (every such row is also a corpus row), as the pair-window
   * form ranks per id. */
-private[graft] case class CosineTopKExec(k: Int, ansi: Boolean, queriesStreamed: Boolean,
+private[graft] case class CosineTopKExec(k: Int, queriesStreamed: Boolean,
     selfSearch: Boolean, output: Seq[Attribute], left: SparkPlan, right: SparkPlan)
     extends BinaryExecNode {
   override def references: AttributeSet = left.outputSet ++ right.outputSet
   override def producedAttributes: AttributeSet = AttributeSet(output)
 
   override def simpleString(maxFields: Int): String =
-    CosineTopK.describe(nodeName, k, ansi, queriesStreamed, selfSearch)
+    CosineTopK.describe(nodeName, k, queriesStreamed, selfSearch)
 
   override def requiredChildDistribution: Seq[Distribution] =
     UnspecifiedDistribution :: BroadcastDistribution(IdentityBroadcastMode) :: Nil
 
   override protected def doExecute(): RDD[InternalRow] = {
     val bc = right.executeBroadcast[Array[InternalRow]]()
-    val (k, ansi, queriesStreamed, selfSearch) =
-      (this.k, this.ansi, this.queriesStreamed, this.selfSearch)
+    val (k, queriesStreamed, selfSearch) = (this.k, this.queriesStreamed, this.selfSearch)
     val types = output.map(_.dataType).toArray
     Bridge.mapPartitionsWithIndexInternal(left.execute(), (part: Int, rows: Iterator[InternalRow]) => {
       val b = VectorBlock.of(bc.value.iterator)
       val scored =
         if (!queriesStreamed) {
           val c = VectorBlock.of(rows)
-          CosineKernel.topK(b, Iterator.range(0, b.size).map(Array(_)), 1, c, k, ansi)
+          CosineKernel.topK(b, Iterator.range(0, b.size).map(Array(_)), 1, c, k)
         } else {
           val dups = if (selfSearch) b.duplicateGroups else Nil
           val skip = dups.map(g => b.ids(g(0))).toSet
           val chunks = Iterator.continually(rows).takeWhile(_.hasNext)
             .map(VectorBlock.of(_, VectorBlock.ChunkRows))
           val own = chunks.flatMap(q => CosineKernel.topK(q,
-            Iterator.range(0, q.size).filterNot(i => skip(q.ids(i))).map(Array(_)), 1, b, k, ansi))
+            Iterator.range(0, q.size).filterNot(i => skip(q.ids(i))).map(Array(_)), 1, b, k))
           if (part == 0 && dups.nonEmpty)
-            own ++ CosineKernel.topK(b, dups.iterator, dups.map(_.length).max, b, k, ansi)
+            own ++ CosineKernel.topK(b, dups.iterator, dups.map(_.length).max, b, k)
           else own
         }
       val proj = UnsafeProjection.create(types)
@@ -281,8 +277,8 @@ private[graft] case class CosineTopKExec(k: Int, ansi: Boolean, queriesStreamed:
 /** Plans [[CosineTopK]] (registered by `graft.functions.GraftExtensions`). */
 private[graft] object CosineTopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case CosineTopK(k, ansi, qs, self, out, l, r) =>
-      CosineTopKExec(k, ansi, qs, self, out, planLater(l), planLater(r)) :: Nil
+    case CosineTopK(k, qs, self, out, l, r) =>
+      CosineTopKExec(k, qs, self, out, planLater(l), planLater(r)) :: Nil
     case _ => Nil
   }
 }

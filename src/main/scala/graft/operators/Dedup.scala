@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.TextFunctions
+import graft.functions.{TextFunctions, VectorOps}
 
 /** Deduplication operators for training-data pipelines (SURVEY.md §2.10).
   *
@@ -524,16 +524,10 @@ object Dedup {
     * precomputed norms; LSH/IVF variants in [[Similarity]] are the scale
     * path). */
   def embeddingNearDupPairs(df: DataFrame, idCol: String, vecCol: String, threshold: Double): DataFrame = {
-    import graft.functions.VectorOps
-    val e = df.select(col(idCol), VectorOps.asDouble(col(vecCol)).as("__v"))
-      .withColumn("__n", VectorOps.norm(col("__v")))
     val p = df.sparkSession.sparkContext.defaultParallelism
-    val a = e.select(col(idCol).as("id_a"), col("__v").as("va"), col("__n").as("na")).repartition(p)
-    val b = e.select(col(idCol).as("id_b"), col("__v").as("vb"), col("__n").as("nb"))
-    a.join(broadcast(b), col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (VectorOps.dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cosine"))
-      .where(col("cosine") >= threshold)
+    val a = Similarity.prepared(df, idCol, vecCol, "a").repartition(p)
+    pairsAbove(a.join(broadcast(Similarity.prepared(df, idCol, vecCol, "b")),
+      col("a_id") < col("b_id")), threshold)
   }
 
   /** Within-cell embedding near-dup pairs — the SemDeDup candidate step
@@ -546,18 +540,18 @@ object Dedup {
     * bucket, or a trained k-means quantizer ([[semanticDedupKMeans]]). */
   def semanticNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
       cellCol: String, threshold: Double): DataFrame = {
-    import graft.functions.VectorOps
-    val e = df.select(col(cellCol).as("__cell"), col(idCol),
-        VectorOps.asDouble(col(vecCol)).as("__v"))
-      .withColumn("__n", VectorOps.norm(col("__v")))
-    val a = e.select(col("__cell"), col(idCol).as("id_a"), col("__v").as("va"), col("__n").as("na"))
-    val b = e.select(col("__cell"), col(idCol).as("id_b"), col("__v").as("vb"), col("__n").as("nb"))
-    a.join(b, Seq("__cell"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (VectorOps.dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cosine"))
-      .where(col("cosine") >= threshold)
+    def side(p: String) = Similarity.prepared(df, idCol, vecCol, p, col(cellCol).as("__cell"))
+    pairsAbove(side("a").join(side("b"), Seq("__cell")).where(col("a_id") < col("b_id")),
+      threshold)
   }
+
+  /** (id_a, id_b, cosine) of the `a`/`b` [[Similarity.prepared]] pair rows
+    * whose [[VectorOps.cosine]] is at least `threshold` — a zero-norm
+    * vector's NULL cosine never passes. */
+  private def pairsAbove(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs.select(col("a_id").as("id_a"), col("b_id").as("id_b"),
+        VectorOps.cosine(VectorOps.dot(col("av"), col("bv")), col("an"), col("bn")).as("cosine"))
+      .where(col("cosine") >= threshold)
 
   /** SemDeDup keep-set: connected components over the within-cell pair
     * graph, keep the min-id representative of each component plus every

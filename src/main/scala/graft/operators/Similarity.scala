@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 import graft.Spread
 import graft.functions.VectorOps
@@ -23,8 +22,12 @@ import graft.functions.VectorOps
   */
 object Similarity {
 
-  private def prepared(df: DataFrame, idCol: String, vecCol: String, prefix: String): DataFrame =
-    df.select(col(idCol).as(s"${prefix}_id"), VectorOps.asDouble(col(vecCol)).as(s"${prefix}v"))
+  /** (`prefix`_id, `prefix`v as array<double>, `prefix`n its norm), after
+    * the `keep` columns: the vector projection every scored path joins. */
+  private[operators] def prepared(df: DataFrame, idCol: String, vecCol: String, prefix: String,
+      keep: Column*): DataFrame =
+    df.select(keep :+ col(idCol).as(s"${prefix}_id") :+
+        VectorOps.asDouble(col(vecCol)).as(s"${prefix}v"): _*)
       .withColumn(s"${prefix}n", VectorOps.norm(col(s"${prefix}v")))
 
   /** (id as long, vector as array<double>) — the kernel's input rows. */
@@ -38,21 +41,34 @@ object Similarity {
     t
   }
 
-  /** Merges per-task top-k candidates into the top k per query id, in the
-    * kernel's own order (Spark's: cosine DESC NULLS LAST with NaN greatest,
-    * then nn_id ASC). A query id that occurs on several rows is ranked once
-    * over all of their candidates. */
-  private def rankPerQuery(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("cosine").desc, col("nn_id").asc)
-    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+  /** The one ranking order of every vector path: per `key`, `score` DESC
+    * NULLS LAST (NaN greatest, so a zero-norm vector's NULL cosine comes
+    * last), then `id` ASC — the best `n` rows, numbered 1..n in `rank`. */
+  private[operators] def rankPerKey(df: DataFrame, key: String, score: String, id: String,
+      n: Int): DataFrame = {
+    val w = Window.partitionBy(col(key)).orderBy(col(score).desc_nulls_last, col(id).asc)
+    df.withColumn("rank", row_number().over(w)).where(col("rank") <= n)
   }
+
+  /** The exact last step of every candidate path: each row of `pairs`
+    * holds a query's and a candidate's [[prepared]] columns (q_id, qv, qn,
+    * c_id, cv, cn); scored by [[VectorOps.cosine]], the best k per query
+    * come out as (vec_id, rank, nn_id, cosine). */
+  private[operators] def exactReRank(pairs: DataFrame, k: Int): DataFrame =
+    rankPerKey(pairs.select(col("q_id"), col("c_id"),
+        VectorOps.cosine(VectorOps.dot(col("qv"), col("cv")), col("qn"), col("cn")).as("cosine")),
+      "q_id", "cosine", "c_id", k)
+      .select(col("q_id").as("vec_id"), col("rank"), col("c_id").as("nn_id"), col("cosine"))
+
+  /** [[exactReRank]] of candidate (q_id, c_id) pairs joined to both
+    * [[prepared]] vector frames. */
+  private[operators] def exactReRank(cand: DataFrame, q: DataFrame, c: DataFrame,
+      k: Int): DataFrame =
+    exactReRank(cand.join(q, "q_id").join(c, "c_id"), k)
 
   private def withIdTypes(df: DataFrame, qType: DataType, cType: DataType): DataFrame =
     df.select(col("vec_id").cast(qType).as("vec_id"), col("rank"),
       col("nn_id").cast(cType).as("nn_id"), col("cosine"))
-
-  private def ansi(df: DataFrame): Boolean =
-    df.sparkSession.conf.get(SQLConf.ANSI_ENABLED.key).toBoolean
 
   /** Exact top-k cosine neighbours of each row of `queries` among the rows
     * of `corpus`: (vec_id, rank, nn_id, cosine). A pair never matches a row
@@ -64,10 +80,9 @@ object Similarity {
     * ([[graft.Spread.ifNarrow]] is the only parallelism rule) is scored
     * against it by [[CosineKernel]], which keeps a bounded top-k per query
     * — no scored pair becomes a row. The frame is lazy: nothing runs until
-    * it is executed. Cosines are bit-identical to
-    * `vec_dot(q, c) / (norm(q) * norm(c))`, including its null cases and
-    * Spark's division by zero (NULL, or DIVIDE_BY_ZERO under ANSI mode) for
-    * a zero-norm vector.
+    * it is executed. Cosines are bit-identical to [[VectorOps.cosine]],
+    * including its null cases: a zero-norm vector's cosine is NULL in both
+    * ANSI modes.
     *
     * When `queries eq corpus` the node's ranks are final, query ids held by
     * several rows included; otherwise a window over at most k candidates
@@ -77,9 +92,10 @@ object Similarity {
     require(k >= 1, s"k $k must be >= 1")
     val (cType, qType) = (integralId(corpus, idCol), integralId(queries, idCol))
     val self = queries eq corpus
-    val scored = topKFrame(k, ansi(corpus), queriesStreamed = true, self,
+    val scored = topKFrame(k, queriesStreamed = true, self,
       Spread.ifNarrow(vectors(queries, idCol, vecCol)), vectors(corpus, idCol, vecCol))
-    withIdTypes(if (self) scored else rankPerQuery(scored, k), qType, cType)
+    withIdTypes(if (self) scored else rankPerKey(scored, "vec_id", "cosine", "nn_id", k),
+      qType, cType)
   }
 
   /** Exact top-k with the cluster-scale orientation: the (small) query side
@@ -92,14 +108,14 @@ object Similarity {
       k: Int): DataFrame = {
     require(k >= 1, s"k $k must be >= 1")
     val (cType, qType) = (integralId(corpus, idCol), integralId(queries, idCol))
-    val scored = topKFrame(k, ansi(corpus), queriesStreamed = false, selfSearch = false,
+    val scored = topKFrame(k, queriesStreamed = false, selfSearch = false,
       Spread.ifNarrow(vectors(corpus, idCol, vecCol)), vectors(queries, idCol, vecCol))
-    withIdTypes(rankPerQuery(scored, k), qType, cType)
+    withIdTypes(rankPerKey(scored, "vec_id", "cosine", "nn_id", k), qType, cType)
   }
 
-  private def topKFrame(k: Int, ansi: Boolean, queriesStreamed: Boolean, selfSearch: Boolean,
+  private def topKFrame(k: Int, queriesStreamed: Boolean, selfSearch: Boolean,
       streamed: DataFrame, broadcast: DataFrame): DataFrame =
-    Bridge.ofRows(streamed.sparkSession, CosineTopK(k, ansi, queriesStreamed, selfSearch,
+    Bridge.ofRows(streamed.sparkSession, CosineTopK(k, queriesStreamed, selfSearch,
       Bridge.logicalPlan(streamed), Bridge.logicalPlan(broadcast)))
 
   /** Recall accounting for an ANN tier, as a single-row count frame: every
@@ -174,14 +190,7 @@ object Similarity {
       .where(col("q_id") =!= col("c_id"))
       .select(col("q_id"), col("c_id"))
       .distinct()
-    val c = prepared(corpus, idCol, vecCol, "c")
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("c_id").asc)
-    cand.join(e, "q_id").join(c, "c_id")
-      .select(col("q_id"), col("c_id"),
-        (VectorOps.dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id").as("vec_id"), col("rank"), col("c_id").as("nn_id"), col("cosine"))
+    exactReRank(cand, e, prepared(corpus, idCol, vecCol, "c"), k)
   }
 
   /** Elementwise mean vector per cell key (posexplode → avg → re-assemble;
@@ -266,7 +275,8 @@ object Similarity {
     * dimension is not divisible by m, the LAST subspace takes the remainder
     * dims — silently dropping them would exclude the tail from codebooks,
     * codes, and ADC scores (a systematic recall hole for vectors that
-    * differ only in trailing dimensions). */
+    * differ only in trailing dimensions). A zero vector normalizes to NULL
+    * elements in both ANSI modes, as its cosine is NULL. */
   private def subvectors(df: DataFrame, idCol: String, vecCol: String, m: Int): DataFrame = {
     val v = VectorOps.asDouble(col(vecCol))
     val n = VectorOps.norm(v)
@@ -274,7 +284,7 @@ object Similarity {
     // fractional for dims not divisible by m (10/4 = 2.5)
     val dsub = (size(v) / m).cast("int")
     df.select(col(idCol).as("__pid"),
-        transform(v, x => x / n).as("__nv"), dsub.as("__ds"), size(v).as("__d"))
+        transform(v, x => try_divide(x, n)).as("__nv"), dsub.as("__ds"), size(v).as("__d"))
       .select(col("__pid"), posexplode(
         transform(sequence(lit(0), lit(m - 1)),
           j => slice(col("__nv"), j * col("__ds") + 1,
@@ -339,15 +349,6 @@ object Similarity {
       .select(col("__pid").as(idCol),
         transform(col("sc"), x => x.getField("cell")).as("codes"))
 
-  /** PQ ANN: ADC scoring against the codes, shortlist, exact re-rank.
-    * All distributed joins: the per-query lookup table (m × kCodes exact
-    * sub-dots) joins the exploded codes on (sub, cell) — no driver loops.
-    * Approximate by design; recall asserted in tests.
-    *
-    * `excludeSelf` (default true, the self-search case) drops candidates
-    * whose id equals the query id. Pass false when `queries` is a separate
-    * frame whose ids merely share the corpus id space — otherwise a true
-    * nearest neighbor with a colliding id is silently dropped. */
   /** Per-query ADC lookup table: the exact dot of each normalized query
     * subvector with each codebook centroid — (q_id, sub, cell, partial).
     * m × kCodes rows per query: broadcast-sized for any real query batch.
@@ -360,6 +361,15 @@ object Similarity {
       .select(col("__pid").as("q_id"), col("sub"), col("cell"),
         VectorOps.dot(col("sv"), col("centroid")).as("partial"))
 
+  /** PQ ANN: ADC scoring against the codes, shortlist, exact re-rank.
+    * All distributed joins: the per-query lookup table (m × kCodes exact
+    * sub-dots) joins the exploded codes on (sub, cell) — no driver loops.
+    * Approximate by design; recall asserted in tests.
+    *
+    * `excludeSelf` (default true, the self-search case) drops candidates
+    * whose id equals the query id. Pass false when `queries` is a separate
+    * frame whose ids merely share the corpus id space — otherwise a true
+    * nearest neighbor with a colliding id is silently dropped. */
   def pqTopK(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, m: Int = 8, kCodes: Int = 16, shortlist: Int = 50, iters: Int = 5,
       excludeSelf: Boolean = true): DataFrame = {
@@ -376,20 +386,11 @@ object Similarity {
       .groupBy(col("q_id"), col("c_id"))
       .agg(sum(col("partial")).as("approx_cos"))
     val approx = if (excludeSelf) scored.where(col("q_id") =!= col("c_id")) else scored
-    val wShort = Window.partitionBy(col("q_id")).orderBy(col("approx_cos").desc, col("c_id").asc)
-    val short = approx.withColumn("__sr", row_number().over(wShort))
-      .where(col("__sr") <= shortlist)
+    val short = rankPerKey(approx, "q_id", "approx_cos", "c_id", shortlist)
       .select(col("q_id"), col("c_id"))
     // exact re-rank of the shortlist only
-    val q = prepared(queries, idCol, vecCol, "q")
-    val c = prepared(corpus, idCol, vecCol, "c")
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("c_id").asc)
-    short.join(q, "q_id").join(c, "c_id")
-      .select(col("q_id"), col("c_id"),
-        (VectorOps.dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id").as("vec_id"), col("rank"), col("c_id").as("nn_id"), col("cosine"))
+    exactReRank(short, prepared(queries, idCol, vecCol, "q"),
+      prepared(corpus, idCol, vecCol, "c"), k)
   }
 
   /** SCALAR-QUANTIZATION ANN (SQ8): each corpus vector compressed to one
@@ -441,24 +442,14 @@ object Similarity {
         zip_with(col("qv"), deltaL, (a, b) => a * b).as("w"))
 
     val scored0 = Spread.ifNarrow(codes).crossJoin(broadcast(qprep))
-      .select(col("q_id"), col("c_id"),
-        ((col("base") + VectorOps.dot(col("w"), col("codes"))) / (col("qn") * col("cn")))
-          .as("approx_cos"))
+      .select(col("q_id"), col("c_id"), VectorOps.cosine(
+        col("base") + VectorOps.dot(col("w"), col("codes")), col("qn"), col("cn")).as("approx_cos"))
     val scored = if (excludeSelf) scored0.where(col("q_id") =!= col("c_id")) else scored0
-    val wShort = Window.partitionBy(col("q_id")).orderBy(col("approx_cos").desc, col("c_id").asc)
-    val short = scored.withColumn("__sr", row_number().over(wShort))
-      .where(col("__sr") <= shortlist)
+    val short = rankPerKey(scored, "q_id", "approx_cos", "c_id", shortlist)
       .select(col("q_id"), col("c_id"))
 
-    val q = prepared(queries, idCol, vecCol, "q")
-    val c = prepared(corpus, idCol, vecCol, "c")
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("c_id").asc)
-    short.join(q, "q_id").join(c, "c_id")
-      .select(col("q_id"), col("c_id"),
-        (VectorOps.dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id").as("vec_id"), col("rank"), col("c_id").as("nn_id"), col("cosine"))
+    exactReRank(short, prepared(queries, idCol, vecCol, "q"),
+      prepared(corpus, idCol, vecCol, "c"), k)
   }
 
   /** IVF-style ANN: assign vectors to cells (here: the `cellCol` key), probe
@@ -469,23 +460,19 @@ object Similarity {
     val cents = centroids(corpus, cellCol, vecCol)
       .select(col(cellCol).as("cell"), col("centroid"))
       .withColumn("cent_n", VectorOps.norm(col("centroid")))
-    val q = prepared(corpus, idCol, vecCol, "q")
-    val wCell = Window.partitionBy(col("q_id")).orderBy(col("cell_cos").desc, col("cell").asc)
-    val probes = q.crossJoin(broadcast(cents))
-      .select(col("q_id"), col("qv"), col("qn"), col("cell"),
-        (VectorOps.dot(col("qv"), col("centroid")) / (col("qn") * col("cent_n"))).as("cell_cos"))
-      .withColumn("cr", row_number().over(wCell))
-      .where(col("cr") <= nProbe)
-      .select(col("q_id"), col("qv"), col("qn"), col("cell"))
+    val probes = probeCells(prepared(corpus, idCol, vecCol, "q"), cents, nProbe)
     val members = prepared(corpus, idCol, vecCol, "c")
       .join(corpus.select(col(idCol).as("c_id"), col(cellCol).as("cell")), "c_id")
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("c_id").asc)
-    probes.join(members, Seq("cell"))
-      .where(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"),
-        (VectorOps.dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id").as("vec_id"), col("rank"), col("c_id").as("nn_id"), col("cosine"))
+    exactReRank(probes.join(members, Seq("cell")).where(col("q_id") =!= col("c_id")), k)
   }
+
+  /** The coarse probe of every IVF path: each [[prepared]] query's
+    * `nProbe` cells of `cents` (cell, centroid, cent_n) with the greatest
+    * centroid cosine, ties toward the lower cell — (q_id, qv, qn, cell). */
+  private[operators] def probeCells(q: DataFrame, cents: DataFrame, nProbe: Int): DataFrame =
+    rankPerKey(q.crossJoin(broadcast(cents))
+        .select(col("q_id"), col("qv"), col("qn"), col("cell"), VectorOps.cosine(
+          VectorOps.dot(col("qv"), col("centroid")), col("qn"), col("cent_n")).as("cell_cos")),
+      "q_id", "cell_cos", "cell", nProbe)
+      .select(col("q_id"), col("qv"), col("qn"), col("cell"))
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
@@ -276,19 +275,9 @@ object VectorIndex {
       : (DataFrame, Array[Int]) = {
     val cents = spark.read.parquet(s"$dir/centroids")
       .withColumn("cent_n", VectorOps.norm(col("centroid")))
-    val q = queries
-      .select(col(idCol).as("q_id"), VectorOps.asDouble(col(vecCol)).as("qv"))
-      .withColumn("qn", VectorOps.norm(col("qv")))
+    val q = Similarity.prepared(queries, idCol, vecCol, "q")
       .repartition(spark.sparkContext.defaultParallelism)
-    val wCell = Window.partitionBy(col("q_id"))
-      .orderBy(col("cell_cos").desc, col("cell").asc)
-    val probes = q.crossJoin(broadcast(cents))
-      .select(col("q_id"), col("qv"), col("qn"), col("cell"),
-        (VectorOps.dot(col("qv"), col("centroid")) / (col("qn") * col("cent_n")))
-          .as("cell_cos"))
-      .withColumn("cr", row_number().over(wCell))
-      .where(col("cr") <= nProbe)
-      .select(col("q_id"), col("qv"), col("qn"), col("cell"))
+    val probes = Similarity.probeCells(q, cents, nProbe)
       .localCheckpoint() // consumed twice: probed-cell list + the join
     val probedCells = probes.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).sorted
@@ -332,18 +321,9 @@ object VectorIndex {
       version: Long = -1L): DataFrame = {
     val (probes, probedCells) =
       coarseProbes(spark, dir, queries, idCol, vecCol, nProbe)
-    val members = prunedScan(spark, dir, probedCells, version)
-      .select(col("cell"), col(idCol).as("c_id"),
-        VectorOps.asDouble(col(vecCol)).as("cv"))
-      .withColumn("cn", VectorOps.norm(col("cv")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("c_id").asc)
-    probes.join(members, Seq("cell"))
-      .where(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"),
-        (VectorOps.dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id").as("vec_id"), col("rank"), col("c_id").as("nn_id"), col("cosine"))
+    val members = Similarity.prepared(prunedScan(spark, dir, probedCells, version),
+      idCol, vecCol, "c", col("cell"))
+    Similarity.exactReRank(probes.join(members, Seq("cell")).where(col("q_id") =!= col("c_id")), k)
   }
 
   /** The ADC-scored shortlist (q_id, c_id) — [[queryPq]]'s codes-only
@@ -374,10 +354,7 @@ object VectorIndex {
       .groupBy(col("q_id"), col("c_id"))
       .agg(sum(col("partial")).as("approx_cos"))
       .where(col("q_id") =!= col("c_id"))
-    val wShort = Window.partitionBy(col("q_id"))
-      .orderBy(col("approx_cos").desc, col("c_id").asc)
-    scored.withColumn("__sr", row_number().over(wShort))
-      .where(col("__sr") <= shortlist)
+    Similarity.rankPerKey(scored, "q_id", "approx_cos", "c_id", shortlist)
       .select(col("q_id"), col("c_id"))
   }
 
@@ -410,20 +387,11 @@ object VectorIndex {
     val shortIds = short.select(col("c_id")).distinct()
     val idList = shortIds.limit(100001).collect()
     val fullScan = prunedScan(spark, dir, probedCells, version)
-      .select(col(idCol).as("c_id"), VectorOps.asDouble(col(vecCol)).as("cv"))
     val full =
       if (idList.length <= 100000)
-        fullScan.where(col("c_id").isin(idList.map(_.get(0)): _*))
-      else fullScan.join(shortIds, Seq("c_id"), "left_semi")
-    val q = queries
-      .select(col(idCol).as("q_id"), VectorOps.asDouble(col(vecCol)).as("qv"))
-      .withColumn("qn", VectorOps.norm(col("qv")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("c_id").asc)
-    short.join(q, Seq("q_id")).join(full.withColumn("cn", VectorOps.norm(col("cv"))), Seq("c_id"))
-      .select(col("q_id"), col("c_id"),
-        (VectorOps.dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cosine"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id").as("vec_id"), col("rank"), col("c_id").as("nn_id"), col("cosine"))
+        fullScan.where(col(idCol).isin(idList.map(_.get(0)): _*))
+      else fullScan.join(shortIds, fullScan(idCol) === shortIds("c_id"), "left_semi")
+    Similarity.exactReRank(short, Similarity.prepared(queries, idCol, vecCol, "q"),
+      Similarity.prepared(full, idCol, vecCol, "c"), k)
   }
 }

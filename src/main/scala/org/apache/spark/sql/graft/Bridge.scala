@@ -51,10 +51,6 @@ object Bridge {
       f: (Int, Iterator[T]) => Iterator[U]): org.apache.spark.rdd.RDD[U] =
     rdd.mapPartitionsWithIndexInternal(f)
 
-  /** Spark's own DIVIDE_BY_ZERO error, as ANSI-mode division raises it. */
-  def divideByZeroError(): ArithmeticException =
-    org.apache.spark.sql.errors.QueryExecutionErrors.divideByZeroError(null)
-
   def registerFunction(spark: SparkSession, name: String,
       clazz: Class[_], builder: Seq[Expression] => Expression): Unit = {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]

@@ -7,14 +7,22 @@ class VectorOpsSpec extends SparkSpec {
   import spark.implicits._
 
   test("dot, norm and cosine match hand computation") {
-    val df = Seq((Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0))).toDF("a", "b")
-    val row = df.select(
+    val df = Seq((1, Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0)),
+      (2, Array(0.0, 0.0, 0.0), Array(4.0, 5.0, 6.0))).toDF("i", "a", "b")
+    def rows = df.orderBy("i").select(
       VectorOps.dot(col("a"), col("b")).as("d"),
       VectorOps.norm(col("a")).as("na"),
-      VectorOps.cosine(col("a"), col("b")).as("c")).head()
-    assert(row.getDouble(0) === 32.0)
-    assert(math.abs(row.getDouble(1) - math.sqrt(14.0)) < 1e-12)
-    assert(math.abs(row.getDouble(2) - 32.0 / (math.sqrt(14.0) * math.sqrt(77.0))) < 1e-12)
+      VectorOps.cosine(VectorOps.dot(col("a"), col("b")),
+        VectorOps.norm(col("a")), VectorOps.norm(col("b"))).as("c")).collect()
+    Seq(false, true).foreach { ansi =>
+      val Array(row, zero) = graft.operators.ZeroNormCases.withAnsi(spark, ansi)(rows)
+      assert(row.getDouble(0) === 32.0)
+      assert(math.abs(row.getDouble(1) - math.sqrt(14.0)) < 1e-12)
+      assert(math.abs(row.getDouble(2) - 32.0 / (math.sqrt(14.0) * math.sqrt(77.0))) < 1e-12)
+      // a zero divisor: NULL in both ANSI modes, never DIVIDE_BY_ZERO
+      assert(zero.getDouble(0) === 0.0 && zero.getDouble(1) === 0.0 && zero.isNullAt(2),
+        s"ansi=$ansi")
+    }
   }
 
   test("native codegen dot product is bit-for-bit equal to the HOF path") {

@@ -132,6 +132,19 @@ class DedupSpec extends SparkSpec {
     assert(pairs === Set((0L, 1L)))
   }
 
+  test("zero-norm vector: its NULL cosine never passes a threshold, in both ANSI modes") {
+    import ZeroNormCases._
+    val c = corpus(spark).withColumn("half", (col("id") % 2).cast("int"))
+    // threshold -1: every pair with a cosine passes, so only NULL keeps one out
+    val cases = Seq[(String, () => org.apache.spark.sql.DataFrame, Option[String])](
+      ("embeddingNearDupPairs", () => Dedup.embeddingNearDupPairs(c, "id", "v", -1.0), None),
+      ("semanticNearDupPairs", () => Dedup.semanticNearDupPairs(c, "id", "v", "half", -1.0),
+        Some("half")))
+    cases.foreach { case (name, path, cell) =>
+      checkPairs(spark, name, path(), pairReference(c, cell, -1.0))
+    }
+  }
+
   test("incremental dedup drops corpus matches, keeps min-id within the batch") {
     val existing = Seq(
       (100L, "the quick brown fox jumps over the lazy dog today"),

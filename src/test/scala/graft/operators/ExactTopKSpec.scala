@@ -29,7 +29,7 @@ class ExactTopKSpec extends SparkSpec {
   // small integer components: duplicate vectors, exact ties and +0.0 cosines
   private val intVec: Gen[Vec] =
     Gen.listOfN(2, Gen.chooseNum(-2, 2)).map(xs => vec(xs.map(_.toDouble): _*))
-  // zero norm (NULL cosine outside ANSI mode), NaN and infinite elements
+  // zero norm (NULL cosine in both ANSI modes), NaN and infinite elements
   // (NaN cosines), a null vector, a null element, a length mismatch
   private val specials: Seq[Vec] = Seq(vec(0.0, 0.0), vec(Double.NaN, 1.0),
     vec(Double.PositiveInfinity, 1.0), null, Seq[java.lang.Double](1.0, null), vec(1.0, 1.0, 1.0))
@@ -79,12 +79,7 @@ class ExactTopKSpec extends SparkSpec {
       if (r.isNullAt(3)) None else Some(java.lang.Double.doubleToLongBits(r.getDouble(3)))))
       .sortBy(t => (t._1, t._2))
 
-  private def withAnsi[T](on: Boolean)(body: => T): T = {
-    val key = "spark.sql.ansi.enabled"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, on.toString)
-    try body finally spark.conf.set(key, prev)
-  }
+  private def withAnsi[T](on: Boolean)(body: => T): T = ZeroNormCases.withAnsi(spark, on)(body)
 
   private val partitionCounts = Seq(1, 2, 7)
 
@@ -131,25 +126,23 @@ class ExactTopKSpec extends SparkSpec {
     }
   }
 
-  test("ANSI mode: a zero-norm pair fails with DIVIDE_BY_ZERO exactly where the window form does") {
-    def divideByZero(df: => DataFrame): Boolean =
-      try { df.collect(); false }
-      catch {
-        case e: Throwable =>
-          Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
-            .exists(x => String.valueOf(x.getMessage).contains("DIVIDE_BY_ZERO"))
+  test("ANSI mode: a zero-norm vector scores NULL, last, as the window form with ANSI off does") {
+    def fixed(rs: (Long, Vec)*) = table(rs.map { case (i, v) => (Long.box(i), v) })(2)
+    val clean = fixed(1L -> vec(1, 2), 2L -> vec(2, 1), 3L -> null,
+      4L -> vec(0, 0, 0), 5L -> vec(-1, 0), 6L -> vec(3, 3), 7L -> vec(0, 1), 8L -> vec(1, 0))
+    val zero = fixed(1L -> vec(1, 2), 2L -> vec(0, 0), 3L -> vec(2, 1),
+      4L -> vec(1, 1), 5L -> vec(-1, 0), 6L -> vec(3, 3), 7L -> vec(0, 1), 8L -> vec(1, 0))
+    Seq(clean -> 2, zero -> 2, zero -> 8).foreach { case (t, k) =>
+      val expected = withAnsi(on = false)(canon(reference(t, t, k)))
+      withAnsi(on = true) {
+        assert(canon(Similarity.exactTopK(t, t, "id", "v", k)) === expected, s"k=$k")
+        assert(canon(Similarity.scalableTopK(t, t, "id", "v", k)) === expected, s"k=$k")
       }
-    withAnsi(on = true) {
-      def fixed(rs: (Long, Vec)*) = table(rs.map { case (i, v) => (Long.box(i), v) })(2)
-      val clean = fixed(1L -> vec(1, 2), 2L -> vec(2, 1), 3L -> null,
-        4L -> vec(0, 0, 0), 5L -> vec(-1, 0), 6L -> vec(3, 3), 7L -> vec(0, 1), 8L -> vec(1, 0))
-      assert(canon(Similarity.exactTopK(clean, clean, "id", "v", 2)) ===
-        canon(reference(clean, clean, 2)))
-      val zero = fixed(1L -> vec(1, 2), 2L -> vec(0, 0), 3L -> vec(2, 1),
-        4L -> vec(1, 1), 5L -> vec(-1, 0), 6L -> vec(3, 3), 7L -> vec(0, 1), 8L -> vec(1, 0))
-      assert(divideByZero(reference(zero, zero, 2)))
-      assert(divideByZero(Similarity.exactTopK(zero, zero, "id", "v", 2)))
     }
+    // every other query ranks the zero vector 2 last, with a NULL cosine
+    val all = withAnsi(on = true)(canon(Similarity.exactTopK(zero, zero, "id", "v", 8)))
+    assert(all.filter(r => r._1 != 2L && r._3 == 2L).map(r => (r._2, r._4)) ===
+      Seq.fill(7)((7, None)))
   }
 
   test("building the frame runs no Spark job; the corpus is read when it runs") {

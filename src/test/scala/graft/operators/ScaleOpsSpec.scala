@@ -17,7 +17,7 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("scalableTopK equals exactTopK with a zero-norm and a NaN vector in the corpus") {
-    // outside ANSI mode a zero-norm cosine is NULL (ranked last) and a NaN
+    // in both ANSI modes a zero-norm cosine is NULL (ranked last) and a NaN
     // cosine ranks first (Spark's sort order), in both orientations
     val corpus = Seq((0L, Array(1.0, 0.0)), (1L, Array(0.0, 0.0)), (2L, Array(0.6, 0.8)),
       (3L, Array(Double.NaN, 1.0)), (4L, Array(-1.0, 0.5)), (5L, Array(0.0, 1.0)))
@@ -26,18 +26,19 @@ class ScaleOpsSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("vec_id", "rank").collect().toSeq.map(r => (r.getLong(0), r.getInt(1),
         r.getLong(2), Option(r.get(3)).map(c => java.lang.Double.doubleToLongBits(c.asInstanceOf[Double]))))
-    val key = "spark.sql.ansi.enabled"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try {
-      val exact = rows(Similarity.exactTopK(corpus, q, "vec_id", "embedding", 6))
-      // vector 1's cosines are NULL, except against the NaN vector 3 (NaN),
-      // which every query ranks first
-      assert(exact.count(_._4.isEmpty) === 8)
-      assert(exact.filter(_._2 == 1).forall(r =>
-        r._3 == 3L && r._4.contains(java.lang.Double.doubleToLongBits(Double.NaN))))
-      assert(rows(Similarity.scalableTopK(corpus, q, "vec_id", "embedding", 6)) === exact)
-    } finally spark.conf.set(key, prev)
+    Seq(false, true).foreach { ansi =>
+      ZeroNormCases.withAnsi(spark, ansi) {
+        val exact = rows(Similarity.exactTopK(corpus, q, "vec_id", "embedding", 6))
+        // vector 1's cosines are NULL, except against the NaN vector 3 (NaN),
+        // which every query ranks first
+        assert(exact.count(_._4.isEmpty) === 8, s"ansi=$ansi")
+        assert(exact.filter(_._2 == 1).forall(r =>
+          r._3 == 3L && r._4.contains(java.lang.Double.doubleToLongBits(Double.NaN))),
+          s"ansi=$ansi")
+        assert(rows(Similarity.scalableTopK(corpus, q, "vec_id", "embedding", 6)) === exact,
+          s"ansi=$ansi")
+      }
+    }
   }
 
   test("salted aggregation equals plain aggregation") {

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{SparkSpec, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -18,6 +19,34 @@ class SimilaritySpec extends SparkSpec {
       .where(col("vec_id") === 0L).orderBy("rank")
       .select("nn_id").as[Long].collect().toSeq
     assert(nn === Seq(1L, 2L)) // 1 (cos≈0.994) then 2 (cos 0) then never -1
+  }
+
+  test("zero-norm vector: NULL cosine, ranked last, no error (LSH, IVF, trained IVF, PQ, SQ)") {
+    import ZeroNormCases._
+    val c = corpus(spark)
+    val k = 8 // every candidate ranked: a NULL cosine has nowhere to hide
+    val lshPairs = {
+      val b = c.select(col("id"), col("v"), explode(sequence(lit(0), lit(3))).as("tbl"))
+        .select(col("id"), col("tbl"), Similarity.lshBucket(col("v"), 2, col("tbl")).as("bucket"))
+      b.select(col("id").as("q_id"), col("tbl"), col("bucket"))
+        .join(b.select(col("id").as("c_id"), col("tbl"), col("bucket")), Seq("tbl", "bucket"))
+        .where(col("q_id") =!= col("c_id")).select("q_id", "c_id").distinct()
+    }
+    // nProbe 3 of 4 cells: the zero cell's NULL centroid cosine ranks last,
+    // so no query probes it and the zero vector is never a candidate
+    val cases = Seq[(String, () => DataFrame, DataFrame)](
+      ("lsh", () => Similarity.lshTopK(c, "id", "v", k, nPlanes = 2, nTables = 4), lshPairs),
+      ("ivf", () => Similarity.ivfTopK(c, "id", "v", "cell", k, nProbe = 4), allPairs(c)),
+      ("ivf, zero cell unprobed", () => Similarity.ivfTopK(c, "id", "v", "cell", k, nProbe = 3),
+        allPairs(c).where(col("c_id") =!= zeroId)),
+      ("trained ivf", () => Similarity.ivfTopKTrained(c.drop("cell"), "id", "v", k, nCells = 2,
+        nProbe = 2, iters = 2), allPairs(c)),
+      ("pq", () => Similarity.pqTopK(c, c, "id", "v", k, m = 2, kCodes = 2, shortlist = k,
+        iters = 2), allPairs(c)),
+      ("sq", () => Similarity.sqTopK(c, c, "id", "v", k, shortlist = k), allPairs(c)))
+    cases.foreach { case (name, path, pairs) =>
+      checkTopK(spark, name, path(), topKReference(c, pairs, k))
+    }
   }
 
   test("LSH ANN returns same-bucket exact-cosine neighbors with useful recall") {

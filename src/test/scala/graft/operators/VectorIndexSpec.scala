@@ -39,6 +39,26 @@ class VectorIndexSpec extends SparkSpec {
     assert(again === brute)
   }
 
+  test("zero-norm vector: NULL cosine, ranked last, no error (query, queryPq)") {
+    import ZeroNormCases.{allPairs, checkTopK, topKReference}
+    val c = ZeroNormCases.corpus(spark).select("id", "v")
+    val k = 8
+    // built and queried under each ANSI setting; exhaustive probe and a
+    // shortlist of the whole corpus, so both equal the pair form
+    def built(pqM: Int): String = {
+      val dir = tmp("graft_vidx_zero")
+      VectorIndex.build(c, "id", "v", dir, nCells = 2, iters = 2, pqM = pqM, pqCodes = 2)
+      dir
+    }
+    val cases = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      ("query", () => VectorIndex.query(spark, built(0), c, "id", "v", k, nProbe = 2)),
+      ("queryPq", () => VectorIndex.queryPq(spark, built(2), c, "id", "v", k, nProbe = 2,
+        shortlist = k)))
+    cases.foreach { case (name, path) =>
+      checkTopK(spark, name, path(), topKReference(c, allPairs(c), k))
+    }
+  }
+
   test("probes prune at the directory level: unprobed cell dirs are never read") {
     val c = corpus(60)
     val dir = tmp("graft_vidx_prune")
